@@ -41,21 +41,27 @@ def _docs_as_pages(docs: DataFrame) -> DataFrame:
     )
 
 
-def _release_after(result: DataFrame, *cached) -> DataFrame:
-    """Materialize ``result`` lineage-free (localCheckpoint), then release
-    every cache the query built.  The driver sweeps all queries() in ONE
-    session, so a query that leaves its input/stage caches behind holds
-    executor memory for the whole sweep; after this, the only retained
-    blocks are the result's own checkpoint blocks (which serve the driver's
-    later collect without recompute).  cached entries may be DataFrames or
-    dicts of stage DataFrames (run_dedup output)."""
-    result = result.localCheckpoint()
-    for item in cached:
-        dfs = item.values() if isinstance(item, dict) else [item]
-        for df in dfs:
-            if isinstance(df, DataFrame):
-                df.unpersist()
-    return result
+# All queries() are swept in ONE session, so a query that leaves its
+# input/stage caches behind holds executor memory for the whole sweep.  A
+# query that caches opens a webdedup.scope.Scope, materializes its result
+# lineage-free (localCheckpoint) inside it and lets the scope free the rest:
+# the only retained blocks are the result's own checkpoint blocks, which
+# serve the later collect without recompute.  The orderBy stays
+# OUTSIDE the checkpoint so a count-style action still elides the sort
+# (checkpointing the sorted frame forces a full range exchange the consumer
+# may never need).
+
+
+def _run_dedup(scope, spark: SparkSession, pages: DataFrame, **kw) -> dict:
+    """run_dedup on the in-memory path, its returned stage caches owned by
+    ``scope``."""
+    from webdedup.config import DedupConfig
+    from webdedup.pipeline import run_dedup
+
+    out = run_dedup(spark, pages, DedupConfig(), **kw)
+    for df in out.values():
+        scope.persist(df)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -65,15 +71,14 @@ def _release_after(result: DataFrame, *cached) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Near-dup clustering of the sf0.001 documents table: signatures ->
     LSH candidates -> features -> decisions -> connected components."""
-    from webdedup.config import DedupConfig
-    from webdedup.pipeline import run_dedup
+    from webdedup.scope import Scope
 
     docs = _read(spark, SF0001, "documents")
-    pages = _docs_as_pages(docs).cache()
-    out = run_dedup(spark, pages, DedupConfig(), with_golden=False)
-    return _release_after(
-        out["clusters"].select("url", "gid"), out, pages
-    ).orderBy("url")
+    with Scope() as scope:
+        pages = scope.persist(_docs_as_pages(docs))
+        out = _run_dedup(scope, spark, pages, with_golden=False)
+        res = out["clusters"].select("url", "gid").localCheckpoint()
+    return res.orderBy("url")
 
 
 # ---------------------------------------------------------------------------
@@ -242,25 +247,24 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a caller checkpoints once per snapshot, so the stage boundary is the
     honest plan, not a bench trick."""
     from webdedup.bloom import incremental_dedup
+    from webdedup.scope import Scope
     from webdedup.textstats import rolling_fingerprint_from_tokens, ws_tokens
 
     docs = _read(spark, sf_dir, "documents")
-    fp = docs.select("doc_id", ws_tokens(F.col("text")).alias("__toks")).select(
-        "doc_id",
-        rolling_fingerprint_from_tokens(
-            F.col("__toks"), k=5, hash_fn="md5"
-        ).alias("fingerprint"),
-    ).persist()
-    # registered so a long-lived session can free it (release_key_caches);
-    # the result DataFrame reads fp until collected, so it cannot be
-    # unpersisted inside this function
-    from webdedup.candidates import _registry
-
-    _registry().append(fp)
-    new = fp.where(F.col("doc_id") % 5 == 0)
-    corpus = fp.where(F.col("doc_id") % 5 != 0)
-    res = incremental_dedup(new, corpus, "fingerprint")
-    return res.select("doc_id", "is_dup").orderBy("doc_id")
+    with Scope() as scope:
+        fp = scope.persist(
+            docs.select("doc_id", ws_tokens(F.col("text")).alias("__toks")).select(
+                "doc_id",
+                rolling_fingerprint_from_tokens(
+                    F.col("__toks"), k=5, hash_fn="md5"
+                ).alias("fingerprint"),
+            )
+        )
+        new = fp.where(F.col("doc_id") % 5 == 0)
+        corpus = fp.where(F.col("doc_id") % 5 != 0)
+        res = incremental_dedup(new, corpus, "fingerprint")
+        res = res.select("doc_id", "is_dup").localCheckpoint()
+    return res.orderBy("doc_id")
 
 
 def q_mix_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,25 +584,15 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the components (recursive CTE) exactly; tau=0.45 is calibrated to the
     synthetic embeddings (near-random vectors, max pairwise cosine ~0.5 —
     real SemDeDup operates at ~0.95 on real encoder output)."""
-    from webdedup.candidates import release_key_caches
+    from webdedup.scope import Scope
     from webdedup.semantic import semantic_dedup
 
-    from webdedup.cluster import release_checkpoints
-
     emb = _read(spark, sf_dir, "embeddings")
-    cc_handles: list = []
-    out, _skew = semantic_dedup(
-        emb, tau=0.45, n_cells=16, centroids="portable", cc_checkpoints=cc_handles
-    )
-    # materialize the result lineage-free, then release the persisted cell
-    # index AND the CC star-forest blocks the components retained (scoped
-    # to THIS call's registry — a concurrent CC consumer on the session is
-    # untouched); the orderBy stays OUTSIDE the checkpoint so a count-style
-    # action still elides the sort (checkpointing the sorted frame forces a
-    # full range exchange the consumer may never need)
-    res = _release_after(out)
-    release_key_caches()
-    release_checkpoints(cc_handles)
+    with Scope() as scope:
+        out, _skew = semantic_dedup(
+            emb, tau=0.45, n_cells=16, centroids="portable", scope=scope
+        )
+        res = out.localCheckpoint()
     return res.orderBy("id")
 
 
@@ -741,13 +735,14 @@ def q_sample_questions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full LSH near-dup clustering of the documents table (non-SQL:
     pandas-UDF signatures + iterative CC -> rows-only check)."""
-    from webdedup.config import DedupConfig
-    from webdedup.pipeline import run_dedup
+    from webdedup.scope import Scope
 
     docs = _read(spark, sf_dir, "documents")
-    pages = _docs_as_pages(docs).cache()
-    out = run_dedup(spark, pages, DedupConfig(), with_substring=False, with_golden=False)
-    return _release_after(out["clusters"], out, pages).orderBy("url")
+    with Scope() as scope:
+        pages = scope.persist(_docs_as_pages(docs))
+        out = _run_dedup(scope, spark, pages, with_substring=False, with_golden=False)
+        res = out["clusters"].localCheckpoint()
+    return res.orderBy("url")
 
 
 def q_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -757,21 +752,24 @@ def q_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesizing a golden record.  One window shuffle on gid on top of the
     flagship clustering (webdedup.cluster.keep_best)."""
     from webdedup.cluster import default_keeper_score, keep_best
-    from webdedup.config import DedupConfig
-    from webdedup.pipeline import run_dedup
+    from webdedup.scope import Scope
 
     docs = _read(spark, sf_dir, "documents")
-    pages = _docs_as_pages(docs).cache()
-    out = run_dedup(spark, pages, DedupConfig(), with_substring=False, with_golden=False)
-    # explicit whitespace class (not \s): Java \s includes \x0B, RE2/DuckDB
-    # \s does not — default_keeper_score pins '[ \t\n\r\f]+' on both sides
-    quality = pages.select("url", default_keeper_score("text").alias("keeper_score"))
-    clustered = out["clusters"].join(quality, "url")
-    members = clustered.groupBy("gid").agg(F.count("*").alias("n_members"))
-    keepers = keep_best(clustered, "keeper_score").select(
-        "gid", F.col("url").alias("keeper"), "keeper_score"
-    )
-    return _release_after(keepers.join(members, "gid"), out, pages).orderBy("gid")
+    with Scope() as scope:
+        pages = scope.persist(_docs_as_pages(docs))
+        out = _run_dedup(scope, spark, pages, with_substring=False, with_golden=False)
+        # explicit whitespace class (not \s): Java \s includes \x0B, RE2/DuckDB
+        # \s does not — default_keeper_score pins '[ \t\n\r\f]+' on both sides
+        quality = pages.select(
+            "url", default_keeper_score("text").alias("keeper_score")
+        )
+        clustered = out["clusters"].join(quality, "url")
+        members = clustered.groupBy("gid").agg(F.count("*").alias("n_members"))
+        keepers = keep_best(clustered, "keeper_score").select(
+            "gid", F.col("url").alias("keeper"), "keeper_score"
+        )
+        res = keepers.join(members, "gid").localCheckpoint()
+    return res.orderBy("gid")
 
 
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -785,37 +783,45 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_strings_from_tokens,
     )
 
+    from webdedup.scope import Scope
+
     docs = _read(spark, sf_dir, "documents")
     toks_df = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
-    sh = toks_df.select(
-        "doc_id",
-        F.size("toks").alias("n_tokens"),
-        shingle_strings_from_tokens(F.col("toks"), 2).alias("sh_strs"),
-    ).persist()
     udf = make_portable_simhash_udf(64)
-    return (
-        sh.withColumn("simhash", udf("sh_strs"))
-        .select("doc_id", "n_tokens", "simhash")
-        .orderBy("doc_id")
-    )
+    with Scope() as scope:
+        sh = scope.persist(
+            toks_df.select(
+                "doc_id",
+                F.size("toks").alias("n_tokens"),
+                shingle_strings_from_tokens(F.col("toks"), 2).alias("sh_strs"),
+            )
+        )
+        res = (
+            sh.withColumn("simhash", udf("sh_strs"))
+            .select("doc_id", "n_tokens", "simhash")
+            .localCheckpoint()
+        )
+    return res.orderBy("doc_id")
 
 
 def q_substring_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suffix-anchor substring pass over documents: winnowing-anchor
     blocking + exploded-gram self-join verification (exact >=120-char
     shared-window certificates)."""
-    from webdedup.config import DedupConfig
-    from webdedup.substring import substring_candidates, verify_overlaps
-
     from webdedup.candidates import doc_ids, rejoin_urls
+    from webdedup.config import DedupConfig
+    from webdedup.scope import Scope
+    from webdedup.substring import substring_candidates, verify_overlaps
 
     cfg = DedupConfig(min_overlap_chars=120)
     docs = _read(spark, sf_dir, "documents")
     pages = _docs_as_pages(docs)
-    # did space end-to-end, one url rejoin for the verified survivors
-    pairs, _ = substring_candidates(pages, cfg, did_pairs=True)
-    verified = verify_overlaps(pairs, pages, cfg)
-    return rejoin_urls(verified, doc_ids(pages)).orderBy("url_a", "url_b")
+    with Scope() as scope:
+        # did space end-to-end, one url rejoin for the verified survivors
+        pairs, _ = substring_candidates(pages, cfg, did_pairs=True, scope=scope)
+        verified = verify_overlaps(pairs, pages, cfg, scope=scope)
+        res = rejoin_urls(verified, doc_ids(pages)).localCheckpoint()
+    return res.orderBy("url_a", "url_b")
 
 
 def q_dedup_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -854,123 +860,120 @@ def q_dedup_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from webdedup.candidates import (
         minhash_candidates,
-        release_key_caches,
         simhash_candidates,
         union_candidates,
     )
     from webdedup.config import DedupConfig
     from webdedup.normalize import tokens
+    from webdedup.scope import Scope
     from webdedup.signatures import compute_signatures, shingle_strings_from_tokens
     from webdedup.substring import substring_candidates, verify_overlaps
 
     cfg = DedupConfig(min_overlap_chars=120)
     docs = _read(spark, sf_dir, "documents")
-    pages = _docs_as_pages(docs).cache()
+    with Scope() as scope:
+        pages = scope.persist(_docs_as_pages(docs))
 
-    exact_n = (
-        pages.groupBy(F.md5("text"))
-        .agg((F.count("*") - F.lit(1)).alias("m"))
-        .agg(F.coalesce(F.sum("m"), F.lit(0)).cast("bigint").alias("n_pairs"))
-        .select(F.lit("exact").alias("tier"), "n_pairs")
-    )
-
-    # attribution basis per doc: exact bigram-shingle set + text hash
-    attrs = pages.select(
-        F.xxhash64("url").alias("did"),
-        shingle_strings_from_tokens(tokens(F.col("text")), cfg.shingle_k).alias("s"),
-        F.md5("text").alias("h"),
-    ).persist()
-
-    def attributed(pairs_did: DataFrame) -> DataFrame:
-        # candidate pairs are UDF/agg-derived (planner estimates unusable)
-        # and attrs carries the shingle arrays — pin shuffle_hash like
-        # rejoin_urls does for the same shape
-        a = attrs.select(
-            F.col("did").alias("did_a"), F.col("s").alias("sa"), F.col("h").alias("ha")
-        )
-        b = attrs.select(
-            F.col("did").alias("did_b"), F.col("s").alias("sb"), F.col("h").alias("hb")
-        )
-        j = pairs_did.join(a.hint("shuffle_hash"), "did_a").join(
-            b.hint("shuffle_hash"), "did_b"
-        )
-        inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
-        union = F.size(F.array_union(F.col("sa"), F.col("sb")))
-        return j.withColumn(
-            "jacc", F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+        exact_n = (
+            pages.groupBy(F.md5("text"))
+            .agg((F.count("*") - F.lit(1)).alias("m"))
+            .agg(F.coalesce(F.sum("m"), F.lit(0)).cast("bigint").alias("n_pairs"))
+            .select(F.lit("exact").alias("tier"), "n_pairs")
         )
 
-    signatures = compute_signatures(pages, cfg)
-    mh, mh_skew = minhash_candidates(signatures, cfg, did_pairs=True)
-    sh, sh_skew = simhash_candidates(signatures, cfg, did_pairs=True)
-    # materialize each candidate set ONCE: the tier aggregate and the
-    # oracle-binding export below both consume it (blocks freed after the
-    # output materializes, same lifecycle as the final localCheckpoint)
-    near_cand = union_candidates(mh, sh).select("did_a", "did_b").localCheckpoint()
-    near_n = (
-        attributed(near_cand)
-        .where(
-            (F.col("jacc") >= cfg.jaccard_threshold) & (F.col("ha") != F.col("hb"))
+        # attribution basis per doc: exact bigram-shingle set + text hash
+        attrs = scope.persist(
+            pages.select(
+                F.xxhash64("url").alias("did"),
+                shingle_strings_from_tokens(tokens(F.col("text")), cfg.shingle_k).alias("s"),
+                F.md5("text").alias("h"),
+            )
         )
-        .agg(F.count("*").cast("bigint").alias("n_pairs"))
-        .select(F.lit("near").alias("tier"), "n_pairs")
-    )
 
-    ss_pairs, ss_skew = substring_candidates(pages, cfg, did_pairs=True)
-    verified, v_skew = verify_overlaps(ss_pairs, pages, cfg, with_metrics=True)
-    sub_cand = verified.select("did_a", "did_b").localCheckpoint()
-    sub_n = (
-        attributed(sub_cand)
-        .where(
-            (F.col("jacc") < cfg.jaccard_threshold) & (F.col("ha") != F.col("hb"))
+        def attributed(pairs_did: DataFrame) -> DataFrame:
+            # candidate pairs are UDF/agg-derived (planner estimates unusable)
+            # and attrs carries the shingle arrays — pin shuffle_hash like
+            # rejoin_urls does for the same shape
+            a = attrs.select(
+                F.col("did").alias("did_a"), F.col("s").alias("sa"), F.col("h").alias("ha")
+            )
+            b = attrs.select(
+                F.col("did").alias("did_b"), F.col("s").alias("sb"), F.col("h").alias("hb")
+            )
+            j = pairs_did.join(a.hint("shuffle_hash"), "did_a").join(
+                b.hint("shuffle_hash"), "did_b"
+            )
+            inter = F.size(F.array_intersect(F.col("sa"), F.col("sb")))
+            union = F.size(F.array_union(F.col("sa"), F.col("sb")))
+            return j.withColumn(
+                "jacc", F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+            )
+
+        signatures = compute_signatures(pages, cfg)
+        mh, mh_skew = minhash_candidates(signatures, cfg, did_pairs=True)
+        sh, sh_skew = simhash_candidates(signatures, cfg, did_pairs=True)
+        # materialize each candidate set ONCE: the tier aggregate and the
+        # oracle-binding export below both consume it (blocks freed with the
+        # scope, after the output materializes)
+        near_cand = scope.checkpoint(union_candidates(mh, sh).select("did_a", "did_b"))
+        near_n = (
+            attributed(near_cand)
+            .where(
+                (F.col("jacc") >= cfg.jaccard_threshold) & (F.col("ha") != F.col("hb"))
+            )
+            .agg(F.count("*").cast("bigint").alias("n_pairs"))
+            .select(F.lit("near").alias("tier"), "n_pairs")
         )
-        .agg(F.count("*").cast("bigint").alias("n_pairs"))
-        .select(F.lit("substring").alias("tier"), "n_pairs")
-    )
 
-    # export the candidate sets the oracle binds to (url space — the
-    # oracle parses doc ids back out of the canonical 'doc-%08d' urls).
-    # literal /tmp, NOT tempfile.gettempdir(): the oracle SQL string below
-    # hardcodes the same path, and a TMPDIR override must not split them
-    from pathlib import Path as _P
+        ss_pairs, ss_skew = substring_candidates(pages, cfg, did_pairs=True, scope=scope)
+        verified, v_skew = verify_overlaps(
+            ss_pairs, pages, cfg, with_metrics=True, scope=scope
+        )
+        sub_cand = scope.checkpoint(verified.select("did_a", "did_b"))
+        sub_n = (
+            attributed(sub_cand)
+            .where(
+                (F.col("jacc") < cfg.jaccard_threshold) & (F.col("ha") != F.col("hb"))
+            )
+            .agg(F.count("*").cast("bigint").alias("n_pairs"))
+            .select(F.lit("substring").alias("tier"), "n_pairs")
+        )
 
-    from webdedup.candidates import doc_ids, rejoin_urls
+        # export the candidate sets the oracle binds to (url space — the
+        # oracle parses doc ids back out of the canonical 'doc-%08d' urls).
+        # literal /tmp, NOT tempfile.gettempdir(): the oracle SQL string below
+        # hardcodes the same path, and a TMPDIR override must not split them
+        from pathlib import Path as _P
 
-    aux = _P("/tmp") / "webdedup_oracle_aux"
-    ids = doc_ids(pages)
-    rejoin_urls(near_cand, ids).write.mode("overwrite").parquet(
-        str(aux / "tier_near_pairs")
-    )
-    rejoin_urls(sub_cand, ids).write.mode("overwrite").parquet(
-        str(aux / "tier_substring_pairs")
-    )
+        from webdedup.candidates import doc_ids, rejoin_urls
 
-    # capped-mass audit row: the Spark side blocks with LSH bands/anchors
-    # whose over-cap buckets are DROPPED (with reported mass) while the
-    # oracle brute-forces all pairs, so a divergence at larger scale is
-    # attributable here instead of surfacing only as a hash mismatch — the
-    # oracle pins 0, and any nonzero capped mass shows up in THIS row
-    dropped_n = (
-        mh_skew.unionByName(sh_skew).unionByName(ss_skew).unionByName(v_skew)
-        .agg(F.coalesce(F.sum("dropped_rows"), F.lit(0)).cast("bigint").alias("n_pairs"))
-        .select(F.lit("candidates_dropped").alias("tier"), "n_pairs")
-    )
+        aux = _P("/tmp") / "webdedup_oracle_aux"
+        ids = doc_ids(pages)
+        rejoin_urls(near_cand, ids).write.mode("overwrite").parquet(
+            str(aux / "tier_near_pairs")
+        )
+        rejoin_urls(sub_cand, ids).write.mode("overwrite").parquet(
+            str(aux / "tier_substring_pairs")
+        )
 
-    out = (
-        exact_n.unionByName(near_n)
-        .unionByName(sub_n)
-        .unionByName(dropped_n)
-        .orderBy("tier")
-    )
-    out = out.localCheckpoint()  # materialize before releasing the caches
-    release_key_caches()
-    from webdedup.cluster import _release_local_checkpoint
+        # capped-mass audit row: the Spark side blocks with LSH bands/anchors
+        # whose over-cap buckets are DROPPED (with reported mass) while the
+        # oracle brute-forces all pairs, so a divergence at larger scale is
+        # attributable here instead of surfacing only as a hash mismatch — the
+        # oracle pins 0, and any nonzero capped mass shows up in THIS row
+        dropped_n = (
+            mh_skew.unionByName(sh_skew).unionByName(ss_skew).unionByName(v_skew)
+            .agg(F.coalesce(F.sum("dropped_rows"), F.lit(0)).cast("bigint").alias("n_pairs"))
+            .select(F.lit("candidates_dropped").alias("tier"), "n_pairs")
+        )
 
-    _release_local_checkpoint(near_cand)
-    _release_local_checkpoint(sub_cand)
-    attrs.unpersist()
-    pages.unpersist()
-    return out
+        out = (
+            exact_n.unionByName(near_n)
+            .unionByName(sub_n)
+            .unionByName(dropped_n)
+            .orderBy("tier")
+        )
+        return out.localCheckpoint()  # materialize before the scope frees its blocks
 
 
 def q_explain_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,44 +987,42 @@ def q_explain_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from webdedup.candidates import exact_candidates, union_candidates
     from webdedup.config import DedupConfig
     from webdedup.features import build_sbs, contains_score, explain_scores
+    from webdedup.scope import Scope
     from webdedup.substring import substring_candidates, verify_overlaps
 
     cfg = DedupConfig(min_overlap_chars=120)
     docs = _read(spark, sf_dir, "documents")
-    pages = _docs_as_pages(docs).cache()
-    ex = exact_candidates(pages)
-    ss_raw, _ = substring_candidates(pages, cfg)
-    ss = (
-        verify_overlaps(ss_raw, pages, cfg)
-        .select("url_a", "url_b")
-        .withColumn("method", F.lit("substring"))
-    )
-    pairs = union_candidates(ex, ss)
-    sbs = build_sbs(pairs, pages.select("url", "text"), ["text"])
-    feats = sbs.select(
-        "url_a",
-        "url_b",
-        "methods",
-        F.lit(None).cast("double").alias("minhash_sim"),
-        F.lit(None).cast("double").alias("simhash_sim"),
-        contains_score(F.col("text_source"), F.col("text_target")).alias(
-            "contains"
-        ),
-    )
-    out = explain_scores(feats)
-    res = out.select(
-        "url_a",
-        "url_b",
-        F.array_join("methods", ",").alias("methods"),
-        "exact_score",
-        "minhash_score",
-        "simhash_score",
-        "substring_score",
-    )
-    from webdedup.candidates import release_key_caches
-
-    res = _release_after(res, pages)
-    release_key_caches()
+    with Scope() as scope:
+        pages = scope.persist(_docs_as_pages(docs))
+        ex = exact_candidates(pages)
+        ss_raw, _ = substring_candidates(pages, cfg, scope=scope)
+        ss = (
+            verify_overlaps(ss_raw, pages, cfg, scope=scope)
+            .select("url_a", "url_b")
+            .withColumn("method", F.lit("substring"))
+        )
+        pairs = union_candidates(ex, ss)
+        sbs = build_sbs(pairs, pages.select("url", "text"), ["text"])
+        feats = sbs.select(
+            "url_a",
+            "url_b",
+            "methods",
+            F.lit(None).cast("double").alias("minhash_sim"),
+            F.lit(None).cast("double").alias("simhash_sim"),
+            contains_score(F.col("text_source"), F.col("text_target")).alias(
+                "contains"
+            ),
+        )
+        out = explain_scores(feats)
+        res = out.select(
+            "url_a",
+            "url_b",
+            F.array_join("methods", ",").alias("methods"),
+            "exact_score",
+            "minhash_score",
+            "simhash_score",
+            "substring_score",
+        ).localCheckpoint()
     return res.orderBy("url_a", "url_b")
 
 

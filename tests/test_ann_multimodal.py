@@ -15,6 +15,7 @@ from webdedup.multimodal import (
     media_meta,
     sniff_media_type,
 )
+from webdedup.scope import Scope
 
 DIM = 16
 
@@ -322,8 +323,12 @@ def test_semantic_dedup_groups_planted_twins(spark):
 
     pdf = _vectors(40)  # ids 0..39 bases, 40..79 their near-twins
     df = spark.createDataFrame(pdf).repartition(4)
-    out, skew = semantic_dedup(df, tau=0.95, n_cells=8, centroids="kmeans")
-    got = {r["id"]: (r["gid"], r["keep"]) for r in out.collect()}
+    with Scope() as scope:
+        out, skew = semantic_dedup(
+            df, tau=0.95, n_cells=8, centroids="kmeans", scope=scope
+        )
+        got = {r["id"]: (r["gid"], r["keep"]) for r in out.collect()}
+        sk = skew.collect()[0]
     assert len(got) == 80
     truth = _semantic_brute_groups(pdf, tau=0.95)
     # cell blocking can only LOSE pairs (twins in different cells), never
@@ -335,7 +340,6 @@ def test_semantic_dedup_groups_planted_twins(spark):
     # quantizer may split a few twin pairs; require >= 0.9 and report
     hit = sum(1 for b in range(40) if got[b][0] == got[b + 40][0])
     assert hit >= 36, f"twin recall {hit}/40"
-    sk = skew.collect()[0]
     assert sk["method"] == "semantic" and sk["dropped_rows"] == 0
 
 
@@ -348,11 +352,12 @@ def test_semantic_dedup_cell_cap_reports_dropped_mass(spark):
     df = spark.createDataFrame(pdf)
     # portable centroids: n_cells=1 is legal there (Spark ML KMeans needs
     # k >= 2) and guarantees one 60-row cell over the cap
-    out, skew = semantic_dedup(df, tau=0.95, n_cells=1, centroids="portable",
-                               cell_cap=10)
-    sk = skew.collect()[0]
+    with Scope() as scope:
+        out, skew = semantic_dedup(df, tau=0.95, n_cells=1, centroids="portable",
+                                   cell_cap=10, scope=scope)
+        sk = skew.collect()[0]
+        rows = out.collect()
     assert sk["dropped_cells"] == 1 and sk["dropped_rows"] == 60
-    rows = out.collect()
     assert len(rows) == 60
     assert all(r["gid"] == r["id"] and r["keep"] for r in rows)
 
@@ -372,8 +377,11 @@ def test_semantic_dedup_handles_negative_and_large_ids(spark):
         {"vec_id": ids, "embedding": [v.astype(np.float32).tolist() for v in vecs]}
     )
     df = spark.createDataFrame(pdf)
-    out, _ = semantic_dedup(df, tau=0.95, n_cells=2, centroids="portable")
-    got = {r["id"]: (r["gid"], r["keep"]) for r in out.collect()}
+    with Scope() as scope:
+        out, _ = semantic_dedup(
+            df, tau=0.95, n_cells=2, centroids="portable", scope=scope
+        )
+        got = {r["id"]: (r["gid"], r["keep"]) for r in out.collect()}
     assert got[-12] == (-12, True)
     assert got[-5][0] in (-12, -5)  # same cell => grouped under the MIN (-12)
     if got[-5][0] == -12:  # cells may split a twin pair; min-id law holds

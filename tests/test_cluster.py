@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from webdedup.cluster import assign_clusters, connected_components, golden_records
+from webdedup.scope import Scope
 
 
 def _random_edges(n_nodes: int, n_edges: int, seed: int) -> pd.DataFrame:
@@ -35,10 +36,13 @@ def test_cc_matches_networkx(spark, seed, n_nodes, n_edges):
     edges = _random_edges(n_nodes, n_edges, seed)
     edges = edges[edges["url_a"] != edges["url_b"]]
     expected = _nx_components(edges)
-    got = {
-        r["url"]: r["gid"]
-        for r in connected_components(spark.createDataFrame(edges)).collect()
-    }
+    with Scope() as scope:
+        got = {
+            r["url"]: r["gid"]
+            for r in connected_components(
+                spark.createDataFrame(edges), scope=scope
+            ).collect()
+        }
     assert got == expected
 
 
@@ -46,7 +50,9 @@ def test_cc_chain_graph(spark):
     # worst-case diameter: a long path must still converge
     nodes = [f"c{i:03d}" for i in range(60)]
     edges = pd.DataFrame({"url_a": nodes[:-1], "url_b": nodes[1:]})
-    got = {r["url"]: r["gid"] for r in connected_components(spark.createDataFrame(edges)).collect()}
+    with Scope() as scope:
+        comp = connected_components(spark.createDataFrame(edges), scope=scope)
+        got = {r["url"]: r["gid"] for r in comp.collect()}
     assert set(got.values()) == {"c000"}
     assert len(got) == 60
 
@@ -58,14 +64,18 @@ def test_cc_permutation_invariant(spark):
     # also swap direction of half the edges
     half = shuffled.index % 2 == 0
     shuffled.loc[half, ["url_a", "url_b"]] = shuffled.loc[half, ["url_b", "url_a"]].values
-    a = {r["url"]: r["gid"] for r in connected_components(spark.createDataFrame(edges)).collect()}
-    b = {r["url"]: r["gid"] for r in connected_components(spark.createDataFrame(shuffled)).collect()}
+    with Scope() as scope:
+        ca = connected_components(spark.createDataFrame(edges), scope=scope)
+        cb = connected_components(spark.createDataFrame(shuffled), scope=scope)
+        a = {r["url"]: r["gid"] for r in ca.collect()}
+        b = {r["url"]: r["gid"] for r in cb.collect()}
     assert a == b
 
 
 def test_cc_empty(spark):
     empty = spark.createDataFrame([], "url_a string, url_b string")
-    assert connected_components(empty).count() == 0
+    with Scope() as scope:
+        assert connected_components(empty, scope=scope).count() == 0
 
 
 def test_assign_clusters_singletons(spark):

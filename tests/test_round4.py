@@ -139,6 +139,7 @@ def test_ivf_default_cells_match_explicit_floor(spark):
     import numpy as np
 
     from webdedup.ann import auto_n_cells, ivf_build
+    from webdedup.scope import Scope
     from webdedup.semantic import semantic_dedup
 
     rng = np.random.default_rng(7)
@@ -156,14 +157,16 @@ def test_ivf_default_cells_match_explicit_floor(spark):
     b = {(r["neighbor_id"], r["cell"]) for r in idx_16.collect()}
     assert a == b
 
-    out_auto, _ = semantic_dedup(corpus, tau=0.45, centroids="portable")
-    out_16, _ = semantic_dedup(corpus, tau=0.45, n_cells=16, centroids="portable")
-    ga = {(r["id"], r["gid"]) for r in out_auto.collect()}
-    gb = {(r["id"], r["gid"]) for r in out_16.collect()}
+    with Scope() as scope:
+        out_auto, _ = semantic_dedup(
+            corpus, tau=0.45, centroids="portable", scope=scope
+        )
+        out_16, _ = semantic_dedup(
+            corpus, tau=0.45, n_cells=16, centroids="portable", scope=scope
+        )
+        ga = {(r["id"], r["gid"]) for r in out_auto.collect()}
+        gb = {(r["id"], r["gid"]) for r in out_16.collect()}
     assert ga == gb
-    from webdedup.candidates import release_key_caches
-
-    release_key_caches()
 
 
 # ---------------------------------------------------------------------------

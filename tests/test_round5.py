@@ -11,9 +11,10 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
-from webdedup import cluster
+from webdedup import cluster, scope
 from webdedup.checkpoint import Checkpointer
 from webdedup.config import DedupConfig
+from webdedup.scope import Scope
 
 
 def _storage_ids(spark) -> set[int]:
@@ -33,15 +34,15 @@ def test_cc_release_frees_storage_blocks(spark):
         "url_a string, url_b string",
     )
     before = _storage_ids(spark)
-    handles: list = []
-    comp = cluster.connected_components(edges, checkpoints=handles)
+    handles = Scope()
+    comp = cluster.connected_components(edges, scope=handles)
     assert comp.count() == 61
     assert handles, "result retained no checkpoint handle"
     assert _storage_ids(spark) - before, "no storage blocks were created"
-    cluster.release_checkpoints(handles)
+    handles.close()
     leaked = _storage_ids(spark) - before
     assert not leaked, f"star-forest blocks leaked after release: {leaked}"
-    assert not handles  # registry drained
+    assert not handles  # scope drained
 
 
 def test_cc_scoped_registries_are_independent(spark):
@@ -49,23 +50,23 @@ def test_cc_scoped_registries_are_independent(spark):
     star forest (the ADVICE r4 'block not found' interleaving failure)."""
     e1 = spark.createDataFrame([("a", "b"), ("b", "c")], "url_a string, url_b string")
     e2 = spark.createDataFrame([("x", "y"), ("y", "z")], "url_a string, url_b string")
-    h1: list = []
-    h2: list = []
-    c1 = cluster.connected_components(e1, checkpoints=h1)
-    c2 = cluster.connected_components(e2, checkpoints=h2)
+    h1 = Scope()
+    h2 = Scope()
+    c1 = cluster.connected_components(e1, scope=h1)
+    c2 = cluster.connected_components(e2, scope=h2)
     c1.count()
-    cluster.release_checkpoints(h1)
+    h1.close()
     # c2's blocks survive the other owner's release: still fully readable
     got = {r["url"]: r["gid"] for r in c2.collect()}
     assert got == {"x": "x", "y": "x", "z": "x"}
-    cluster.release_checkpoints(h2)
+    h2.close()
 
 
 def test_release_warns_once_on_plan_drift(monkeypatch):
     """A failing block release must WARN (once per session), not silently
     disable all checkpoint hygiene — so accessor drift under a future Spark
     breaks a test instead of quietly re-leaking."""
-    monkeypatch.setattr(cluster, "_RELEASE_FAILED_ONCE", False)
+    monkeypatch.setattr(scope, "_RELEASE_FAILED_ONCE", False)
 
     class Drifted:
         @property
@@ -73,11 +74,11 @@ def test_release_warns_once_on_plan_drift(monkeypatch):
             raise AttributeError("plan accessor drift")
 
     with pytest.warns(RuntimeWarning, match="block release failed"):
-        cluster._release_local_checkpoint(Drifted())
+        scope._release_local_checkpoint(Drifted())
     # second failure in the same session: silent (warn-once)
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        cluster._release_local_checkpoint(Drifted())
+        scope._release_local_checkpoint(Drifted())
 
 
 def test_release_batch_frees_streaming_blocks(spark, tmp_path):

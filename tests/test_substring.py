@@ -3,6 +3,7 @@
 import pandas as pd
 
 from webdedup.config import DedupConfig
+from webdedup.scope import Scope
 from webdedup.substring import anchor_keys, substring_candidates, verify_overlaps
 
 
@@ -21,12 +22,13 @@ def test_anchor_detects_planted_overlap(spark):
             ("u3", "no overlap with anything else at all just some plain words here"),
         ],
     )
-    pairs, _ = substring_candidates(pages, cfg)
-    got = {(r["url_a"], r["url_b"]) for r in pairs.collect()}
+    with Scope() as scope:
+        pairs, _ = substring_candidates(pages, cfg, scope=scope)
+        got = {(r["url_a"], r["url_b"]) for r in pairs.collect()}
+        verified = verify_overlaps(pairs, pages, cfg, scope=scope).collect()
     assert ("u1", "u2") in got
     assert all("u3" not in p for p in got)
 
-    verified = verify_overlaps(pairs, pages, cfg).collect()
     assert len(verified) == 1
     # each shared dense gram is one aligned exact >=200-char window; the
     # span here is a 63-char phrase repeated 5x, so DISTINCT grams collapse
@@ -44,7 +46,9 @@ def test_verify_rejects_short_overlap(spark):
         ],
     )
     pairs = spark.createDataFrame(pd.DataFrame({"url_a": ["a"], "url_b": ["b"]}))
-    assert verify_overlaps(pairs, pages, cfg).count() == 0  # overlap < 200 chars
+    with Scope() as scope:
+        # overlap < 200 chars
+        assert verify_overlaps(pairs, pages, cfg, scope=scope).count() == 0
 
 
 def test_anchor_selection_alignment_invariant(spark):

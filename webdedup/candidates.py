@@ -21,38 +21,11 @@ Output candidate schema mirrors the reference's ES output
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig
-
-
-# DataFrames persisted by _pairs_from_keys(persist_keys=True) / substring
-# verification.  The persists are needed while the candidate stage computes
-# (the key table feeds 4 consumers inside one job); after the pair list is
-# MATERIALIZED (stage parquet write or persisted-and-counted) the caches are
-# dead weight — release_key_caches() frees them so repeated run_dedup calls
-# or streaming batches in one long-lived session don't accumulate cached
-# blocks for the process lifetime.  The registry is THREAD-LOCAL: two
-# pipelines running on different threads of one SparkSession must not
-# release each other's key tables mid-job.  Library callers that invoke
-# substring_candidates/verify_overlaps directly own the release — call
-# release_key_caches() (same thread) once the results are materialized.
-_TL = threading.local()
-
-
-def _registry() -> list[DataFrame]:
-    if not hasattr(_TL, "tables"):
-        _TL.tables = []
-    return _TL.tables
-
-
-def release_key_caches() -> None:
-    reg = _registry()
-    while reg:
-        reg.pop().unpersist()
+from webdedup.scope import Scope
 
 
 def bucket_stats(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -78,7 +51,7 @@ def _pairs_from_keys(
     cfg: DedupConfig,
     method: str,
     max_bucket: int | None = None,
-    persist_keys: bool = False,
+    scope: Scope | None = None,
     carry_cols: list[str] | None = None,
     pair_filter=None,
     id_col: str = "url",
@@ -100,21 +73,20 @@ def _pairs_from_keys(
     primitives.  Urls rejoin AFTER the distinct, only for surviving pairs
     (rejoin_urls).
 
-    persist_keys: the key table is scanned up to 4x downstream (bucket
-    sizing, the prune join, and — through the pruned table — both sides of
-    the self-join).  When keys derive from a persisted signature table
+    scope: the key table is scanned up to 4x downstream (bucket sizing,
+    the prune join, and — through the pruned table — both sides of the
+    self-join).  When keys derive from a persisted signature table
     (minhash/simhash) the re-scan is a cheap cached explode; when they come
     from a pandas-UDF corpus scan (substring anchors) the whole UDF
-    re-executes per consumer — pass True there so the scan runs once AND
-    the pruned table below is cached (MEMORY_AND_DISK, spill-safe at
-    scale).
+    re-executes per consumer — pass the caller's scope there so the scan
+    runs once AND the pruned table below is cached (MEMORY_AND_DISK,
+    spill-safe at scale), both held until the caller closes the scope.
     """
-    max_bucket = max_bucket or cfg.max_bucket_size
-    if persist_keys:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-        _registry().append(keys)
+    max_bucket = max_bucket or cfg.max_bucket_size
+    if scope is not None:
+        keys = scope.persist(keys, StorageLevel.MEMORY_AND_DISK)
     stats = bucket_stats(keys, cfg)
     ok = stats.where(
         (F.col("bucket_size") >= 2) & (F.col("bucket_size") <= max_bucket)
@@ -152,7 +124,7 @@ def _pairs_from_keys(
     # executed plan: 0 ReusedExchange), so without a cache the key-table
     # exchange, the bucket-stats pass and the key derivation all run TWICE
     # per source.  Persist pruned ONLY when the keys are UDF-derived
-    # (persist_keys — substring anchors), where the recompute is a second
+    # (a scope is passed — substring anchors), where the recompute is a second
     # full corpus scan through Python.  For signature-derived keys
     # (minhash/simhash) the recompute is an explode of the already-cached
     # signature table + one exchange, and an interleaved same-hour A/B at
@@ -165,11 +137,8 @@ def _pairs_from_keys(
     # single exchange, no cache) was measured 49% SLOWER end-to-end:
     # higher-order-function lambdas evaluate interpreted, which took the
     # per-pair hamming gate out of whole-stage codegen.
-    if persist_keys:
-        from pyspark import StorageLevel
-
-        pruned = pruned.persist(StorageLevel.MEMORY_AND_DISK)
-        _registry().append(pruned)
+    if scope is not None:
+        pruned = scope.persist(pruned, StorageLevel.MEMORY_AND_DISK)
     a, b = f"{id_col}_a", f"{id_col}_b"
     left = pruned.select(
         F.col("key_idx"),
@@ -247,6 +216,11 @@ def minhash_candidates(
     ~ 0.036 at J=0.2), and a pair only matters to the decision rule at
     J >= jaccard_threshold (0.5), which cannot estimate below 0.12 — so
     blocking recall at the decision boundary is unaffected.
+
+    The band-key table is re-derived from ``signatures`` by each of its up
+    to 4 consumers (see _pairs_from_keys): library callers should persist
+    the signatures frame in their scope first (``scope.persist(sigs)``),
+    or the signature UDF scan reruns per consumer.
     """
     use_mini = cfg.mini_max_hamming > 0 and "mini" in signatures.columns
     # dictionary-encode url -> 64-bit did BEFORE the explode: the band-key
@@ -320,6 +294,9 @@ def simhash_candidates(
 
     Pigeonhole: hamming distance <= simhash_max_hamming < simhash_blocks
     guarantees the pair shares at least one block value.
+
+    As for minhash_candidates: persist the signatures frame in the
+    caller's scope first, or the signature UDF scan reruns per consumer.
     """
     # did-encoded key rows (see minhash_candidates): 8 B id + 8 B signature
     # per exploded block row, urls rejoined only for survivors

@@ -17,11 +17,10 @@ invariant).  Golden-record aggregation maps suricate/grouping.py:224-322
 
 from __future__ import annotations
 
-import threading
-import warnings
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from webdedup.scope import Scope
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -134,73 +133,12 @@ def _local_contract(edges: DataFrame, num_partitions: int | None = None) -> Data
 
 SINGLE_TASK_EDGE_LIMIT = 10_000_000  # ~1 GB of edge strings in one task
 
-# localCheckpoints whose blocks the RESULT of connected_components still
-# reads (the fixpoint star forest / the single-task union-find output).
-# Intermediate rounds are freed inline the moment the next round
-# materializes; these last ones are freed once the caller has materialized
-# everything derived from the return value — via release_checkpoints() on a
-# caller-owned registry (preferred: scoped ownership, safe with concurrent
-# CC calls on one session), or release_cc_checkpoints() draining this
-# process-global fallback registry (lock-guarded, but it drains EVERY
-# owner's entries — only safe when CC callers are strictly sequential).
-_CC_LOCK = threading.Lock()
-_CC_CHECKPOINTS: list[DataFrame] = []
-_RELEASE_FAILED_ONCE = False
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint's storage blocks.  DataFrame.unpersist only
-    clears CacheManager entries; a localCheckpoint's blocks hang off the
-    LogicalRDD itself, reachable via the analyzed plan.  Only call when
-    NOTHING will read df again — the lineage is truncated, so the blocks
-    are unrecoverable.  If the private plan accessor ever drifts under a
-    new Spark, we leak (driver GC still reclaims eventually) but WARN once
-    per session — a silent pass here would quietly disable all block
-    hygiene with no signal."""
-    global _RELEASE_FAILED_ONCE
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception as exc:  # noqa: BLE001 — plan-shape drift: leak, don't fail
-        if not _RELEASE_FAILED_ONCE:
-            _RELEASE_FAILED_ONCE = True
-            warnings.warn(
-                "localCheckpoint block release failed "
-                f"({type(exc).__name__}: {exc}); connected-components "
-                "checkpoint blocks will accumulate until driver GC — "
-                "check the private plan accessor against this Spark version",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-
-
-def release_checkpoints(handles: list[DataFrame]) -> None:
-    """Free the storage blocks in a CALLER-OWNED registry (the list passed
-    to ``connected_components(checkpoints=...)``).  Call AFTER
-    materializing (persist+count / parquet write / localCheckpoint)
-    everything derived from that call's return value.  Releases only the
-    handles this caller created — concurrent CC consumers on the same
-    session are untouched."""
-    while handles:
-        _release_local_checkpoint(handles.pop())
-
-
-def release_cc_checkpoints() -> None:
-    """Drain the process-global fallback registry (CC calls that did not
-    pass ``checkpoints=``).  This frees EVERY unreleased handle regardless
-    of owner — safe only when CC callers are strictly sequential; code that
-    may interleave CC calls (streams, threads) must own its registry and
-    use release_checkpoints() instead."""
-    with _CC_LOCK:
-        drained = _CC_CHECKPOINTS[:]
-        _CC_CHECKPOINTS.clear()
-    for df in drained:
-        _release_local_checkpoint(df)
-
 
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
-    checkpoints: list[DataFrame] | None = None,
+    *,
+    scope: Scope,
 ) -> DataFrame:
     """edges(url_a, url_b) -> (url, gid) for every node appearing in edges.
 
@@ -215,23 +153,13 @@ def connected_components(
     contraction output is one edge per non-root node, so the single-task
     cutoff is really a bound on component-member count.
 
-    checkpoints: caller-owned registry for the localCheckpoint handles the
-    RESULT still reads — release with release_checkpoints(registry) after
-    materializing everything derived from the return value.  None (default)
-    registers in the process-global fallback drained by
-    release_cc_checkpoints(), which is only safe for sequential callers.
+    scope: holds the localCheckpoint the RESULT still reads (the fixpoint
+    star forest / the single-task union-find output); close it after
+    materializing everything derived from the return value.  Intermediate
+    rounds are released here the moment the next round materializes.
     """
-
-    def _register(df: DataFrame) -> None:
-        if checkpoints is not None:
-            checkpoints.append(df)
-        else:
-            with _CC_LOCK:
-                _CC_CHECKPOINTS.append(df)
-
     cur = edges.select("url_a", "url_b").where(F.col("url_a") != F.col("url_b"))
-    cur = _local_contract(cur)
-    cur = cur.localCheckpoint()
+    cur = scope.checkpoint(_local_contract(cur))
 
     n_edges = cur.count()
     if n_edges == 0:
@@ -239,17 +167,14 @@ def connected_components(
         # a partial computation of the whole upstream pipeline before the
         # contraction ran; the contraction of an empty edge set is empty,
         # so the count above answers both questions in one job
-        _release_local_checkpoint(cur)
+        scope.release(cur)
         return edges.sparkSession.createDataFrame([], "url string, gid string")
     if n_edges <= SINGLE_TASK_EDGE_LIMIT:
         # contracted graph is small: one exact union-find pass, no rounds
-        final = _local_contract(cur, num_partitions=1).localCheckpoint()
+        final = scope.checkpoint(_local_contract(cur, num_partitions=1))
         # localCheckpoint is eager: final is materialized, the contraction
-        # checkpoint is dead NOW; final's blocks serve the return value and
-        # are freed by the caller via its registry (release_checkpoints /
-        # the global release_cc_checkpoints fallback)
-        _release_local_checkpoint(cur)
-        _register(final)
+        # checkpoint is dead NOW; final's blocks serve the return value
+        scope.release(cur)
         membership = final.select(
             F.col("url_b").alias("url"), F.col("url_a").alias("gid")
         )
@@ -258,22 +183,20 @@ def connected_components(
     prev_sig = None
     for _ in range(max_iterations):
         nxt = _large_star(_symmetrize(cur))
-        nxt = _small_star(_symmetrize(nxt)).localCheckpoint()
+        nxt = scope.checkpoint(_small_star(_symmetrize(nxt)))
         sig = _edge_checksum(nxt)
         # the checksum materialized nxt, so the PREVIOUS round's blocks are
         # dead — at scale each round holds an O(edges) block set, and
         # without this inline release a 20-round job retains 20 of them
-        _release_local_checkpoint(cur)
+        scope.release(cur)
         cur = nxt
         if sig == prev_sig:
             break
         prev_sig = sig
     else:
-        # free the last round's blocks before failing — an exception path
-        # must not strand an O(edges) block set
-        _release_local_checkpoint(cur)
+        # no release here: the owner's scope frees the last round's blocks
+        # as this error unwinds
         raise RuntimeError(f"connected_components did not converge in {max_iterations} rounds")
-    _register(cur)
 
     # fixpoint is a star forest: every edge points child -> root
     sym = _symmetrize(cur)

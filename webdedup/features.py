@@ -23,8 +23,6 @@ reference's own lesson (its `apply(axis=1)` comparators were its bottleneck).
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -33,6 +31,7 @@ from pyspark.sql import types as T
 
 from webdedup.config import DedupConfig
 from webdedup.normalize import token_set
+from webdedup.scope import Scope
 
 # ratio comparators see at most this many chars (candidates only, post-block)
 LEV_TEXT_CAP = 512
@@ -275,27 +274,6 @@ def _both_ratios(a: pd.Series, b: pd.Series) -> pd.DataFrame:
 # side-by-side view + feature table
 # --------------------------------------------------------------------------
 
-_TL_DOCS = threading.local()
-
-
-def _doc_registry() -> list[DataFrame]:
-    if not hasattr(_TL_DOCS, "tables"):
-        _TL_DOCS.tables = []
-    return _TL_DOCS.tables
-
-
-def release_doc_caches() -> None:
-    """Free the doc-side caches compute_features persisted (same ownership
-    contract as candidates.release_key_caches: the caller releases once the
-    feature table is MATERIALIZED — run_dedup does this after the clusters
-    stage's action; direct compute_features callers own it themselves).
-    Thread-local: two pipelines on different threads of one session cannot
-    release each other's doc tables mid-job."""
-    reg = _doc_registry()
-    while reg:
-        reg.pop().unpersist()
-
-
 def build_sbs(pairs: DataFrame, docs: DataFrame, cols: list[str]) -> DataFrame:
     """Pair-restricted side-by-side view: two hash joins of the pair list to
     the doc table (suricate/dftransformers/cartesian.py:168-188 semantics),
@@ -377,6 +355,8 @@ def compute_features(
     cfg: DedupConfig,
     ratios_for: str = "all",
     n_pairs: int | None = None,
+    *,
+    scope: Scope,
 ) -> DataFrame:
     """Candidate pairs -> feature table (url_a, url_b, methods?, f_1..f_k).
 
@@ -396,6 +376,9 @@ def compute_features(
     n_pairs: pair count if the caller already knows it (stage manifest /
     persisted count) — sizes the scoring repartition without an extra job.
     None -> counted here (cheap when pairs is persisted/snapshot-backed).
+
+    scope: holds the persisted doc side; close it once the feature table
+    is materialized.
     """
     doc_cols = ["text", "lang", "shingles", "mini", "simhash"]
     # CPU-parallelism guard: candidate-pair rows are tiny (two urls + method
@@ -421,12 +404,10 @@ def compute_features(
     # the doc side feeds BOTH SBS joins, and AQE's runtime stage reuse does
     # not fire across the two identical subtrees (verified: the
     # pages-join-signatures build executed twice, once per side) — persist
-    # so the corpus-wide join runs once; the CALLER releases via
-    # release_doc_caches() once the feature table is materialized
+    # so the corpus-wide join runs once
     from pyspark import StorageLevel
 
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    _doc_registry().append(docs)
+    docs = scope.persist(docs, StorageLevel.MEMORY_AND_DISK)
     sbs = build_sbs(pairs, docs, doc_cols)
     # token sets derived in the same JVM stage (no extra shuffle)
     sbs = sbs.withColumn("toks_source", token_set(F.col("text_source"))).withColumn(

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webdedup.scope import Scope
+
 
 def canonical_pairs(df: DataFrame, a: str = "url_a", b: str = "url_b") -> DataFrame:
     """Order-insensitive pair canonicalization: (least, greatest), distinct."""
@@ -37,11 +39,12 @@ def pairs_from_clusters(clusters: DataFrame, id_col: str = "url", gid_col: str =
 
 def pair_metrics(predicted: DataFrame, truth: DataFrame) -> dict:
     """Recall/precision/F1 of predicted dup pairs vs planted truth pairs."""
-    pred = canonical_pairs(predicted).cache()
-    true = canonical_pairs(truth).cache()
-    tp = pred.join(true, ["url_a", "url_b"], "inner").count()
-    n_pred = pred.count()
-    n_true = true.count()
+    with Scope() as scope:
+        pred = scope.persist(canonical_pairs(predicted))
+        true = scope.persist(canonical_pairs(truth))
+        tp = pred.join(true, ["url_a", "url_b"], "inner").count()
+        n_pred = pred.count()
+        n_true = true.count()
     recall = tp / n_true if n_true else 1.0
     precision = tp / n_pred if n_pred else 1.0
     f1 = 2 * precision * recall / (precision + recall) if (precision + recall) else 0.0

@@ -15,6 +15,7 @@ assembly, CC == its `SingleGrouping` transitive gid propagation.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,10 +28,10 @@ from webdedup.cluster import (
     default_keeper_score,
     golden_records,
     keep_best,
-    release_checkpoints,
 )
 from webdedup.config import DedupConfig
-from webdedup.features import compute_features, release_doc_caches
+from webdedup.features import compute_features
+from webdedup.scope import Scope
 from webdedup.signatures import compute_signatures
 from webdedup.triage import triage_rule
 
@@ -41,11 +42,12 @@ def _column_identity(df: DataFrame, col) -> str:
     (public API, analysis only — no job).  Column.__repr__ is NOT used:
     its format carries no stability guarantee across Spark versions, so a
     version bump could silently change every stage identity derived from
-    it (spurious recompute of otherwise-valid checkpoints)."""
+    it (spurious recompute of otherwise-valid checkpoints).  An expression
+    that does not resolve against ``df`` raises ValueError naming it."""
     try:
         return df.select(col).columns[0]
-    except Exception:  # unresolvable against df: fall back to the repr
-        return str(col)
+    except AnalysisException as exc:
+        raise ValueError(f"{col} does not resolve against {df.columns}") from exc
 
 
 def run_dedup(
@@ -83,9 +85,11 @@ def run_dedup(
 
     EAGER by contract: this runner executes the stages at call time even
     without a checkpoint_dir (the candidate count sizes the feature
-    repartition, triage collects its thresholds, CC iterates) and releases
-    the candidate key-table caches before returning.  A caller that wants
-    ONE stage lazily should call that stage's function directly
+    repartition, triage collects its thresholds, CC iterates) and frees
+    every block it holds internally (substring key tables, the feature doc
+    side, the CC star forest) before returning, or as an exception
+    unwinds; only the stage outputs it returns stay cached.  A caller that
+    wants ONE stage lazily should call that stage's function directly
     (compute_signatures, candidates.minhash_candidates, ...) — they
     compose on plain DataFrames.
     """
@@ -134,175 +138,173 @@ def run_dedup(
     if ckpt:
         signatures = signatures.drop("part")
 
-    # -- 2. candidates (four sources, provenance-tagged) ---------------------
-    skew_sources: list[DataFrame] = []
+    # three block scopes, each closed where its blocks die (all of them if
+    # an exception unwinds): substring key tables, the feature stage's doc
+    # side, the CC star forest
+    with Scope() as keys, Scope() as doc_side, Scope() as cc:
+        # -- 2. candidates (four sources, provenance-tagged) -----------------
+        skew_sources: list[DataFrame] = []
 
-    def build_candidates() -> DataFrame:
-        # all sources in did space; urls rejoin ONCE after the union dedup
-        # (two joins total, vs two per source — see candidates.rejoin_urls)
-        mh_pairs, mh_skew = cand.minhash_candidates(signatures, cfg, did_pairs=True)
-        sh_pairs, sh_skew = cand.simhash_candidates(signatures, cfg, did_pairs=True)
-        ex_pairs = cand.exact_candidates(pages, did_pairs=True)
-        skew_sources[:] = [mh_skew, sh_skew]
-        sources = [mh_pairs, sh_pairs, ex_pairs]
-        if with_substring:
-            ss_pairs, ss_skew = sub.substring_candidates(pages, cfg, did_pairs=True)
-            verified, verify_skew = sub.verify_overlaps(
-                ss_pairs, pages, cfg, with_metrics=True
-            )
-            skew_sources.extend([ss_skew, verify_skew])
-            sources.append(
-                verified.select("did_a", "did_b").withColumn(
-                    "method", F.lit("substring")
+        def build_candidates() -> DataFrame:
+            # all sources in did space; urls rejoin ONCE after the union dedup
+            # (two joins total, vs two per source — see candidates.rejoin_urls)
+            mh_pairs, mh_skew = cand.minhash_candidates(signatures, cfg, did_pairs=True)
+            sh_pairs, sh_skew = cand.simhash_candidates(signatures, cfg, did_pairs=True)
+            ex_pairs = cand.exact_candidates(pages, did_pairs=True)
+            skew_sources[:] = [mh_skew, sh_skew]
+            sources = [mh_pairs, sh_pairs, ex_pairs]
+            if with_substring:
+                ss_pairs, ss_skew = sub.substring_candidates(
+                    pages, cfg, did_pairs=True, scope=keys
                 )
+                verified, verify_skew = sub.verify_overlaps(
+                    ss_pairs, pages, cfg, with_metrics=True, scope=keys
+                )
+                skew_sources.extend([ss_skew, verify_skew])
+                sources.append(
+                    verified.select("did_a", "did_b").withColumn(
+                        "method", F.lit("substring")
+                    )
+                )
+            return cand.rejoin_urls(
+                cand.union_candidates(*sources), cand.doc_ids(pages)
             )
-        return cand.rejoin_urls(
-            cand.union_candidates(*sources), cand.doc_ids(pages)
+
+        def candidate_metrics(_out: DataFrame) -> dict:
+            """Per-method dropped skew mass -> the stage manifest, so a run can
+            audit what the bucket caps cost (north rule: capped mass is
+            reported, never silent).  Cost: the minhash/simhash skew aggregates
+            re-run their band/block explode + two-phase count from the
+            signatures snapshot (those key tables are deliberately NOT
+            persisted — pinning the job's dominant shuffle payload in RAM to
+            save one bounded metrics job is the wrong trade at scale); the
+            substring aggregates read their persisted key tables."""
+            if not skew_sources:
+                return {}
+            from functools import reduce
+
+            union = reduce(lambda a, b: a.unionByName(b), skew_sources)
+            return {"skew_drops": [r.asDict() for r in union.collect()]}
+
+        pairs = staged(
+            "candidates",
+            (lambda: _with_part(build_candidates(), "url_a"))
+            if ckpt
+            else build_candidates,
+            parents=["signatures"],
+            partition_by=["part"] if ckpt else None,
+            metrics=candidate_metrics if ckpt else None,
         )
+        if ckpt:
+            pairs = pairs.drop("part")
 
-    def candidate_metrics(_out: DataFrame) -> dict:
-        """Per-method dropped skew mass -> the stage manifest, so a run can
-        audit what the bucket caps cost (north rule: capped mass is
-        reported, never silent).  Cost: the minhash/simhash skew aggregates
-        re-run their band/block explode + two-phase count from the
-        signatures snapshot (those key tables are deliberately NOT
-        persisted — pinning the job's dominant shuffle payload in RAM to
-        save one bounded metrics job is the wrong trade at scale); the
-        substring aggregates read their persisted key tables."""
-        if not skew_sources:
-            return {}
-        from functools import reduce
-
-        union = reduce(lambda a, b: a.unionByName(b), skew_sources)
-        return {"skew_drops": [r.asDict() for r in union.collect()]}
-
-    pairs = staged(
-        "candidates",
-        (lambda: _with_part(build_candidates(), "url_a"))
-        if ckpt
-        else build_candidates,
-        parents=["signatures"],
-        partition_by=["part"] if ckpt else None,
-        metrics=candidate_metrics if ckpt else None,
-    )
-    if ckpt:
-        pairs = pairs.drop("part")
-
-    # pair count: free from the stage manifest when checkpointed, else one
-    # count that also MATERIALIZES the persisted pair list — after which the
-    # key-table caches inside the candidate sources are dead weight
-    n_pairs = (
-        ckpt.manifest("candidates")["row_count"] if ckpt else pairs.count()
-    )
-    cand.release_key_caches()
-
-    # -- 3. features ----------------------------------------------------------
-    docs = pages.select("url", "text", "lang").join(
-        signatures.select("url", "shingles", "mini", "simhash"), "url"
-    )
-    # expensive ratio comparators only for triage-mixed pairs — the
-    # reference's pruning semantics (PruningPipe scores only mixed pairs
-    # with the apply comparators, pruningpipe.py:102-107)
-    features = staged(
-        "features",
-        lambda: compute_features(pairs, docs, cfg, ratios_for="mixed", n_pairs=n_pairs),
-        parents=["candidates"],
-    )
-    if ckpt:
-        # the stage parquet write above already materialized the feature
-        # table — the doc-side cache compute_features persisted is dead
-        # weight now.  The non-ckpt path releases after the clusters
-        # action instead (the features persist fills transitively there).
-        release_doc_caches()
-
-    # -- 4. decision: rule triage, or the learned question-loop path ---------
-    def decision_metrics(out_df: DataFrame) -> dict:
-        """Per-method positive-pair attribution -> the stage manifest
-        (the tiered-dedup audit: which candidate source the accepted
-        pairs came from, so a run can see what each tier of the
-        cascade paid for) — recorded for BOTH decision paths, so an ml
-        run keeps the same audit trail a rule run has.  Bounded collect:
-        <= one row per method."""
-        rows = (
-            out_df.where(F.col("is_dup") == 1)
-            .select(F.explode("methods").alias("method"))
-            .groupBy("method")
-            .count()
-            .collect()
+        # pair count: free from the stage manifest when checkpointed, else one
+        # count that also MATERIALIZES the persisted pair list — after which the
+        # key-table caches inside the candidate sources are dead weight
+        n_pairs = (
+            ckpt.manifest("candidates")["row_count"] if ckpt else pairs.count()
         )
-        m: dict = {"positive_pairs_by_method": {r["method"]: r["count"] for r in rows}}
-        if decision == "ml":
-            # the learned path's knobs belong in the manifest next to its
-            # output: budget size and CV choice explain WHY these decisions
-            m["decision"] = "ml"
-            m["n_questions"] = n_questions
-            m["cross_validate"] = cross_validate
-        return m
+        keys.close()
 
-    if decision == "ml":
-        from webdedup.classify import run_ml_decision
-
-        # decision mode + budget + the LABEL CONTENT are the stage identity:
-        # a rule-decisions checkpoint must never resume as ml output, and a
-        # re-run with different truth labels (same pages, same dir) must not
-        # resume decisions trained on the old labels
-        truth_fp = (
-            input_fingerprint(truth_pairs, ["url_a", "url_b"]) if ckpt else ""
+        # -- 3. features -----------------------------------------------------
+        docs = pages.select("url", "text", "lang").join(
+            signatures.select("url", "shingles", "mini", "simhash"), "url"
         )
-        decided = staged(
-            "decisions",
-            lambda: run_ml_decision(
-                features,
-                truth_pairs,
-                cfg,
-                n_questions=n_questions,
-                cross_validate=cross_validate,
+        # expensive ratio comparators only for triage-mixed pairs — the
+        # reference's pruning semantics (PruningPipe scores only mixed pairs
+        # with the apply comparators, pruningpipe.py:102-107)
+        features = staged(
+            "features",
+            lambda: compute_features(
+                pairs, docs, cfg, ratios_for="mixed", n_pairs=n_pairs, scope=doc_side
             ),
-            parents=["features"],
-            extra=f":decision=ml:q={n_questions}:cv={cross_validate}:truth={truth_fp}",
-            metrics=decision_metrics if ckpt else None,
+            parents=["candidates"],
         )
-    else:
-        decided = staged(
-            "decisions",
-            lambda: triage_rule(features, cfg),
-            parents=["features"],
-            metrics=decision_metrics if ckpt else None,
-        )
-    matches = decided.where(F.col("is_dup") == 1)
+        if ckpt:
+            # the stage parquet write above already materialized the feature
+            # table — the doc-side cache compute_features persisted is dead
+            # weight now.  The non-ckpt path releases after the clusters
+            # action instead (the features persist fills transitively there).
+            doc_side.close()
 
-    # -- 5. connected components -> gid --------------------------------------
-    # this run OWNS its CC checkpoint registry: releasing the process-global
-    # one would also free star forests another concurrent CC consumer
-    # (stream micro-batch, second run_dedup on the same session) still reads
-    cc_handles: list[DataFrame] = []
+        # -- 4. decision: rule triage, or the learned question-loop path -----
+        def decision_metrics(out_df: DataFrame) -> dict:
+            """Per-method positive-pair attribution -> the stage manifest
+            (the tiered-dedup audit: which candidate source the accepted
+            pairs came from, so a run can see what each tier of the
+            cascade paid for) — recorded for BOTH decision paths, so an ml
+            run keeps the same audit trail a rule run has.  Bounded collect:
+            <= one row per method."""
+            rows = (
+                out_df.where(F.col("is_dup") == 1)
+                .select(F.explode("methods").alias("method"))
+                .groupBy("method")
+                .count()
+                .collect()
+            )
+            m: dict = {"positive_pairs_by_method": {r["method"]: r["count"] for r in rows}}
+            if decision == "ml":
+                # the learned path's knobs belong in the manifest next to its
+                # output: budget size and CV choice explain WHY these decisions
+                m["decision"] = "ml"
+                m["n_questions"] = n_questions
+                m["cross_validate"] = cross_validate
+            return m
 
-    def build_clusters() -> DataFrame:
-        comp = connected_components(
-            matches.select("url_a", "url_b"), checkpoints=cc_handles
-        )
-        return assign_clusters(pages.select("url", "warc_ts", "text", "lang"), comp).select(
-            "url", "gid"
-        )
+        if decision == "ml":
+            from webdedup.classify import run_ml_decision
 
-    clusters = staged("clusters", build_clusters, parents=["decisions"])
-    if not ckpt:
-        # one count materializes the persisted stage, after which the
-        # star-forest blocks connected_components retained are dead — the
-        # released lineage is unrecoverable, so the materialization must
-        # come FIRST (the stage persist is disk-backed; local-mode block
-        # loss means process death, the same failure class localCheckpoint
-        # already has).  The same count transitively fills the
-        # features/decisions persists, so the doc-side cache inside
-        # compute_features is releasable here too (the ckpt path released
-        # it at the features stage write; build_clusters ALWAYS runs on
-        # this path, so the count is never an extra action).
-        clusters.count()
-        release_doc_caches()
-    # empty registry: fully-resumed checkpointed run, or a zero-duplicate
-    # edge set CC released inline — nothing to free either way
-    if cc_handles:
-        release_checkpoints(cc_handles)
+            # decision mode + budget + the LABEL CONTENT are the stage identity:
+            # a rule-decisions checkpoint must never resume as ml output, and a
+            # re-run with different truth labels (same pages, same dir) must not
+            # resume decisions trained on the old labels
+            truth_fp = (
+                input_fingerprint(truth_pairs, ["url_a", "url_b"]) if ckpt else ""
+            )
+            decided = staged(
+                "decisions",
+                lambda: run_ml_decision(
+                    features,
+                    truth_pairs,
+                    cfg,
+                    n_questions=n_questions,
+                    cross_validate=cross_validate,
+                ),
+                parents=["features"],
+                extra=f":decision=ml:q={n_questions}:cv={cross_validate}:truth={truth_fp}",
+                metrics=decision_metrics if ckpt else None,
+            )
+        else:
+            decided = staged(
+                "decisions",
+                lambda: triage_rule(features, cfg),
+                parents=["features"],
+                metrics=decision_metrics if ckpt else None,
+            )
+        matches = decided.where(F.col("is_dup") == 1)
+
+        # -- 5. connected components -> gid ----------------------------------
+        def build_clusters() -> DataFrame:
+            comp = connected_components(matches.select("url_a", "url_b"), scope=cc)
+            return assign_clusters(
+                pages.select("url", "warc_ts", "text", "lang"), comp
+            ).select("url", "gid")
+
+        clusters = staged("clusters", build_clusters, parents=["decisions"])
+        if not ckpt:
+            # one count materializes the persisted stage, after which the
+            # star-forest blocks connected_components retained are dead — the
+            # released lineage is unrecoverable, so the materialization must
+            # come FIRST (the stage persist is disk-backed; local-mode block
+            # loss means process death, the same failure class localCheckpoint
+            # already has).  The same count transitively fills the
+            # features/decisions persists, so the doc-side cache inside
+            # compute_features is releasable here too (the ckpt path released
+            # it at the features stage write; build_clusters ALWAYS runs on
+            # this path, so the count is never an extra action).
+            clusters.count()
+            doc_side.close()
+        cc.close()
 
     out: dict[str, DataFrame] = {
         "signatures": signatures,

@@ -39,8 +39,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from webdedup.ann import dot, ivf_build
-from webdedup.candidates import _registry
 from webdedup.cluster import connected_components
+from webdedup.scope import Scope
 
 # connected_components is string-typed and picks the LEXICOGRAPHIC min per
 # component; ids are made sortable-as-strings by shifting into the unsigned
@@ -68,6 +68,8 @@ def semantic_pairs(
     centroids: str = "kmeans",
     seed: int = 1337,
     cell_cap: int = 65536,
+    *,
+    scope: Scope,
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs(id_a, id_b, cosine), skew_metrics) — candidate semantic-dup
     pairs: same quantizer cell AND round(cosine, 6) >= tau.
@@ -78,17 +80,15 @@ def semantic_pairs(
     ``embedding::DOUBLE[]`` does.  Cells above ``cell_cap`` members are
     dropped entirely and accounted in skew_metrics (dropped_cells /
     dropped_rows / max_dropped_cell, method='semantic') — the repo-wide
-    capped-mass contract."""
+    capped-mass contract.  The cell index is held in ``scope``: close it
+    once the pairs and skew metrics are materialized."""
     index, _cents, _quantized = ivf_build(
         corpus, n_cells, id_col, vec_col, centroids, seed
     )
     # ivf_build's index rows carry (neighbor_id, cv, c_norm, cell); the
     # assignment UDF runs once here and both join sides read the staged
-    # result instead of re-assigning per side.  Registered in the shared
-    # key-cache registry (candidates.release_key_caches) — the same
-    # caller-owned release contract the LSH candidate stage uses
-    index = index.persist()
-    _registry().append(index)
+    # result instead of re-assigning per side
+    index = scope.persist(index)
     sizes = index.groupBy("cell").agg(F.count(F.lit(1)).alias("cell_size"))
     over = sizes.where(F.col("cell_size") > cell_cap)
     skew_metrics = over.agg(
@@ -141,7 +141,8 @@ def semantic_dedup(
     centroids: str = "kmeans",
     seed: int = 1337,
     cell_cap: int = 65536,
-    cc_checkpoints: list[DataFrame] | None = None,
+    *,
+    scope: Scope,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignments(id, gid, keep), skew_metrics) — every corpus row gets
     the minimum id of its semantic-duplicate component as gid (own id when
@@ -151,26 +152,18 @@ def semantic_dedup(
     driver query's oracle recomputes centroid choice, cell assignment,
     pair set and components in SQL); 'kmeans' is the production quantizer.
 
-    Cache lifecycle: the persisted cell index lands in the shared key-cache
-    registry; once the assignments (and skew metrics, which read the index)
-    are materialized, the caller releases it with
-    candidates.release_key_caches() — the same contract the LSH candidate
-    stage documents.  The connected-components star forest is retained the
-    same way: pass a caller-owned ``cc_checkpoints`` list and, after
-    materializing everything derived from the return value, call
-    cluster.release_checkpoints(cc_checkpoints) — scoped ownership, safe
-    next to concurrent CC consumers on the same session.  Without the list
-    the handles land in the process-global registry
-    (cluster.release_cc_checkpoints), which is sequential-callers-only.
+    Block lifecycle: the persisted cell index and the connected-components
+    star forest are both held in ``scope``; close it once the assignments
+    (and the skew metrics, which read the index) are materialized.
     """
     pairs, skew_metrics = semantic_pairs(
-        corpus, tau, n_cells, id_col, vec_col, centroids, seed, cell_cap
+        corpus, tau, n_cells, id_col, vec_col, centroids, seed, cell_cap, scope=scope
     )
     edges = pairs.select(
         _encode_id(F.col("id_a")).alias("url_a"),
         _encode_id(F.col("id_b")).alias("url_b"),
     )
-    comp = connected_components(edges, checkpoints=cc_checkpoints).select(
+    comp = connected_components(edges, scope=scope).select(
         _decode_id(F.col("url")).alias("id"),
         _decode_id(F.col("gid")).alias("__gid"),
     )

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig
 from webdedup.features import jaccard_sketch
+from webdedup.scope import Scope, free_checkpoint
 from webdedup.signatures import compute_signatures
 
 # band-key index geometry (performance-only: false positives cost a wasted
@@ -113,21 +114,21 @@ def _write_epoch_index(new_state: DataFrame, state_dir: str, epoch_id: int) -> N
     harmless index dir)."""
     from webdedup.bloom import build_bloom
 
-    keys = (
-        _exploded_keys(
-            new_state.select(
-                F.col("url").alias("ref_url"), F.col("gid").alias("ref_gid"), "bands"
-            ),
-            ["ref_url", "ref_gid"],
+    with Scope() as scope:
+        keys = scope.persist(
+            _exploded_keys(
+                new_state.select(
+                    F.col("url").alias("ref_url"),
+                    F.col("gid").alias("ref_gid"),
+                    "bands",
+                ),
+                ["ref_url", "ref_gid"],
+            ).withColumn("part", F.pmod("k64", F.lit(_INDEX_PARTS)).cast("int"))
         )
-        .withColumn("part", F.pmod("k64", F.lit(_INDEX_PARTS)).cast("int"))
-        .persist()
-    )
-    keys.write.mode("overwrite").partitionBy("part").parquet(
-        str(_index_path(state_dir) / f"epoch={epoch_id}")
-    )
-    bloom = build_bloom(keys, "k64", m_bits=_BLOOM_M, k=_BLOOM_K)
-    keys.unpersist()
+        keys.write.mode("overwrite").partitionBy("part").parquet(
+            str(_index_path(state_dir) / f"epoch={epoch_id}")
+        )
+        bloom = build_bloom(keys, "k64", m_bits=_BLOOM_M, k=_BLOOM_K)
     bf = _bloom_file(state_dir, epoch_id)
     bf.parent.mkdir(parents=True, exist_ok=True)
     bf.write_bytes(bloom.bits.tobytes())
@@ -399,117 +400,108 @@ def process_batch(
     directory instead of double-appending rows.  Callers outside streaming
     may omit epoch_id (auto: next uncommitted epoch).
 
-    BLOCK LIFECYCLE: the returned frame is localCheckpoint-backed (one
-    batch-sized block set).  Once the caller has consumed it (collect /
-    write / copied into another materialization), call
-    ``release_batch(assigned)`` — otherwise each micro-batch leaves its
-    block set to driver GC, the slow-leak class the CC star forests
-    already pay to avoid.  run_incremental's foreachBatch does this
-    automatically."""
+    BLOCK LIFECYCLE: everything the batch caches or checkpoints lives in
+    one scope over the whole body.  The CC star forest is freed right after
+    the assignment's localCheckpoint, the signature and new-state caches
+    once the epoch is committed.  On success only the returned frame
+    outlives the call: it is localCheckpoint-backed (one batch-sized block
+    set), and once the caller has consumed it (collect / write / copied
+    into another materialization) it calls ``release_batch(assigned)`` —
+    otherwise each micro-batch leaves its block set to driver GC.
+    run_incremental's foreachBatch does this automatically.  On any
+    exception every block the batch created is freed before it
+    propagates."""
     from webdedup.candidates import minhash_candidates
     from webdedup.cluster import connected_components
 
     if epoch_id is None:
         committed = _committed_epochs(state_dir)
         epoch_id = (committed[-1] + 1) if committed else 0
-    sigs = compute_signatures(batch, cfg).persist()
-    state = read_state(spark, state_dir, before_epoch=epoch_id)
+    with Scope() as held, Scope() as cc:
+        sigs = held.persist(compute_signatures(batch, cfg))
+        state = read_state(spark, state_dir, before_epoch=epoch_id)
 
-    # 1. batch-internal grouping (new records may duplicate each other)
-    internal_pairs, _ = minhash_candidates(sigs, cfg)
-    sh = sigs.select("url", "shingles")
-    verified = (
-        internal_pairs.join(
-            sh.select(F.col("url").alias("url_a"), F.col("shingles").alias("sh_a")),
-            "url_a",
+        # 1. batch-internal grouping (new records may duplicate each other)
+        internal_pairs, _ = minhash_candidates(sigs, cfg)
+        sh = sigs.select("url", "shingles")
+        verified = (
+            internal_pairs.join(
+                sh.select(F.col("url").alias("url_a"), F.col("shingles").alias("sh_a")),
+                "url_a",
+            )
+            .join(
+                sh.select(F.col("url").alias("url_b"), F.col("shingles").alias("sh_b")),
+                "url_b",
+            )
+            .where(
+                jaccard_sketch(F.col("sh_a"), F.col("sh_b"), cfg.shingle_sketch_k)
+                >= cfg.jaccard_threshold
+            )
+            .select("url_a", "url_b")
         )
-        .join(
-            sh.select(F.col("url").alias("url_b"), F.col("shingles").alias("sh_b")),
-            "url_b",
-        )
-        .where(
-            jaccard_sketch(F.col("sh_a"), F.col("sh_b"), cfg.shingle_sketch_k)
-            >= cfg.jaccard_threshold
-        )
-        .select("url_a", "url_b")
-    )
-    # batch-owned CC registry: two streams (or a stream + a batch run_dedup)
-    # sharing one session must not free each other's live star forests
-    cc_handles: list[DataFrame] = []
-    internal = connected_components(verified, checkpoints=cc_handles)
+        internal = connected_components(verified, scope=cc)
 
-    # 2. match against accumulated reference state — via the band-key index
-    #    (explodes only the batch; bloom + partition pruning on state) when
-    #    every committed epoch has one, else the legacy state explode
-    if state is not None:
-        committed_below = [e for e in _committed_epochs(state_dir) if e < epoch_id]
-        coverage = _index_coverage(state_dir, committed_below)
-        if coverage is not None:
-            matched = _match_against_index(spark, sigs, state_dir, coverage, cfg)
+        # 2. match against accumulated reference state — via the band-key
+        #    index (explodes only the batch; bloom + partition pruning on
+        #    state) when every committed epoch has one, else the legacy
+        #    state explode
+        if state is not None:
+            committed_below = [e for e in _committed_epochs(state_dir) if e < epoch_id]
+            coverage = _index_coverage(state_dir, committed_below)
+            if coverage is not None:
+                matched = _match_against_index(spark, sigs, state_dir, coverage, cfg)
+            else:
+                matched = _match_against(sigs, state, cfg)
         else:
-            matched = _match_against(sigs, state, cfg)
-    else:
-        matched = spark.createDataFrame([], "url string, gid string")
+            matched = spark.createDataFrame([], "url string, gid string")
 
-    # 3. assembly: state gid wins; else batch-internal component propagated
-    #    through min matched gid; else own url (founds a new group)
-    assign = (
-        sigs.select("url")
-        .join(matched, "url", "left")
-        .join(internal.withColumnRenamed("gid", "igid"), "url", "left")
-    )
-    # propagate a matched gid to the whole internal component
-    comp_gid = (
-        assign.where(F.col("igid").isNotNull() & F.col("gid").isNotNull())
-        .groupBy("igid")
-        .agg(F.min("gid").alias("cgid"))
-    )
-    assigned = (
-        assign.join(comp_gid, "igid", "left")
-        .withColumn(
-            "gid",
-            F.coalesce(F.col("gid"), F.col("cgid"), F.col("igid"), F.col("url")),
+        # 3. assembly: state gid wins; else batch-internal component
+        #    propagated through min matched gid; else own url (founds a new
+        #    group)
+        assign = (
+            sigs.select("url")
+            .join(matched, "url", "left")
+            .join(internal.withColumnRenamed("gid", "igid"), "url", "left")
         )
-        .select("url", "gid")
+        # propagate a matched gid to the whole internal component
+        comp_gid = (
+            assign.where(F.col("igid").isNotNull() & F.col("gid").isNotNull())
+            .groupBy("igid")
+            .agg(F.min("gid").alias("cgid"))
+        )
         # materialize ONCE (batch-sized blocks): the state write below and
         # the caller's read both consume assigned — without this each
         # recomputes the whole match plan, and the CC star forest behind
         # `internal` could never be freed (one leaked block set per
         # micro-batch over a stream's lifetime)
-        .localCheckpoint()
-    )
-    from webdedup.candidates import release_key_caches
-    from webdedup.cluster import release_checkpoints
+        assigned = held.checkpoint(
+            assign.join(comp_gid, "igid", "left")
+            .withColumn(
+                "gid",
+                F.coalesce(F.col("gid"), F.col("cgid"), F.col("igid"), F.col("url")),
+            )
+            .select("url", "gid")
+        )
+        cc.close()
 
-    release_checkpoints(cc_handles)
-    # the localCheckpoint above materialized the whole match plan, so the
-    # pruned-key cache minhash_candidates persisted (thread-local registry;
-    # this batch is its only owner on this thread) is dead weight now —
-    # without this drain each micro-batch leaks one pruned-key block set
-    release_key_caches()
-
-    new_state = (
-        sigs.select("url", "shingles", "bands").join(assigned, "url").persist()
-    )
-    # index + bloom first, then the state parquet whose _SUCCESS commits the
-    # epoch; each is an overwrite, so a foreachBatch replay after any crash
-    # point rewrites identical artifacts (idempotent commit)
-    _write_epoch_index(new_state, state_dir, epoch_id)
-    new_state.write.mode("overwrite").parquet(
-        str(_state_path(state_dir) / f"epoch={epoch_id}")
-    )
-    new_state.unpersist()
-    sigs.unpersist()
-    return assigned
+        new_state = held.persist(
+            sigs.select("url", "shingles", "bands").join(assigned, "url")
+        )
+        # index + bloom first, then the state parquet whose _SUCCESS commits
+        # the epoch; each is an overwrite, so a foreachBatch replay after any
+        # crash point rewrites identical artifacts (idempotent commit)
+        _write_epoch_index(new_state, state_dir, epoch_id)
+        new_state.write.mode("overwrite").parquet(
+            str(_state_path(state_dir) / f"epoch={epoch_id}")
+        )
+        return held.detach(assigned)
 
 
 def release_batch(assigned: DataFrame) -> None:
     """Free the localCheckpoint blocks behind a process_batch result.
     Call ONLY after the caller has fully consumed the frame — the lineage
     is truncated, so the blocks are unrecoverable afterwards."""
-    from webdedup.cluster import _release_local_checkpoint
-
-    _release_local_checkpoint(assigned)
+    free_checkpoint(assigned)
 
 
 def windowed_event_counts(

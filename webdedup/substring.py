@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 
 from webdedup.candidates import _pairs_from_keys
 from webdedup.config import DedupConfig
+from webdedup.scope import Scope
 from webdedup.signatures import _mix64
 
 # Polynomial rolling-hash base over UTF-8 bytes; odd -> invertible mod 2^64,
@@ -121,23 +122,25 @@ def anchor_keys(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def substring_candidates(
-    pages: DataFrame, cfg: DedupConfig, did_pairs: bool = False
+    pages: DataFrame, cfg: DedupConfig, did_pairs: bool = False, *, scope: Scope
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs(url_a, url_b, method='substring'), skew_metrics).
     did_pairs=True keeps the pairs did-encoded (did_a, did_b) for the
-    pipeline's single post-union rejoin; verify_overlaps accepts both."""
+    pipeline's single post-union rejoin; verify_overlaps accepts both.
+    The anchor key tables are held in ``scope``: close it once the pairs
+    and skew metrics are materialized."""
     from webdedup.candidates import doc_ids, rejoin_urls
 
     keys = anchor_keys(pages, cfg)
-    # persist_keys: the anchor scan is a pandas-UDF pass over the full
-    # corpus; without the persist it re-executes once per downstream
-    # consumer (measured as the bulk of a 63s sf0.1 query).
+    # scope: the anchor scan is a pandas-UDF pass over the full corpus;
+    # without the persist it re-executes once per downstream consumer
+    # (measured as the bulk of a 63s sf0.1 query).
     pairs_did, skew = _pairs_from_keys(
         keys,
         cfg,
         "substring",
         max_bucket=cfg.anchor_max_docs,
-        persist_keys=True,
+        scope=scope,
         id_col="did",
     )
     if did_pairs:
@@ -146,7 +149,12 @@ def substring_candidates(
 
 
 def verify_overlaps(
-    pairs: DataFrame, pages: DataFrame, cfg: DedupConfig, with_metrics: bool = False
+    pairs: DataFrame,
+    pages: DataFrame,
+    cfg: DedupConfig,
+    with_metrics: bool = False,
+    *,
+    scope: Scope,
 ) -> DataFrame:
     """Keep pairs sharing at least one exact min_overlap_chars-char substring.
 
@@ -161,7 +169,8 @@ def verify_overlaps(
     Mixed-hotness caveat: a pair admitted via a rare anchor whose only
     >=min_overlap_chars shared span is hotter than verify_max_docs loses
     its certificate here; the dropped-bucket metrics are how a run audits
-    that exposure (see the candidates-stage manifest).
+    that exposure (see the candidates-stage manifest).  The sized gram
+    table is held in ``scope``: close it once the result is materialized.
 
     Plan shape: the dense grams of candidate-pair MEMBER docs are exploded to
     (doc_id, gram) rows and self-joined within gram buckets, then the
@@ -211,12 +220,10 @@ def verify_overlaps(
     # bucket-size gate as a window count: one shuffle on gram (reused by the
     # self-join below), no second aggregate-and-join pass over the UDF output
     w = Window.partitionBy("gram")
-    sized = grams.withColumn("d", F.count(F.lit(1)).over(w)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sized = scope.persist(
+        grams.withColumn("d", F.count(F.lit(1)).over(w)),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    from webdedup.candidates import _registry
-
-    _registry().append(sized)
     shared = sized.where(
         (F.col("d") >= 2) & (F.col("d") <= cfg.verify_max_docs)
     ).drop("d")
