@@ -32,15 +32,13 @@ import argparse
 import json
 import multiprocessing as mp
 import os
+import queue
 import time
 
 N = 256  # 256x256 f64 = 512 KB per operand: L2-resident, DRAM-silent
 
 
 def _worker(seconds: float, barrier, out_q) -> None:
-    os.environ["OMP_NUM_THREADS"] = "1"  # one core per worker, like a task
-    os.environ["OPENBLAS_NUM_THREADS"] = "1"
-    os.environ["MKL_NUM_THREADS"] = "1"
     import numpy as np
 
     rng = np.random.default_rng(0)
@@ -67,7 +65,20 @@ def run_level(workers: int, seconds: float) -> dict:
     ]
     for p in procs:
         p.start()
-    results = [out_q.get() for _ in procs]
+    # a worker that died (OOM kill, BLAS abort) never reports: fail loudly
+    # instead of blocking forever on the queue
+    timeout = seconds * 3 + 30
+    try:
+        results = [out_q.get(timeout=timeout) for _ in procs]
+    except queue.Empty:
+        codes = [p.exitcode for p in procs]  # None: still running
+        for p in procs:
+            p.kill()
+            p.join()
+        raise RuntimeError(
+            f"{workers}-worker level: a worker did not report within {timeout:.0f}s "
+            f"(exit codes {codes})"
+        ) from None
     for p in procs:
         p.join()
     total_it = sum(it for it, _ in results)
@@ -85,6 +96,11 @@ def main() -> None:
     ap.add_argument("--seconds", type=float, default=3.0)
     ap.add_argument("--repeat", type=int, default=3)
     args = ap.parse_args()
+    # one core per worker, like a task: set before any worker starts, so
+    # every start method (fork, forkserver, spawn) hands it to the BLAS
+    # pool at numpy import
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+        os.environ[var] = "1"
     levels = [int(w) for w in args.workers.split(",")]
 
     best: dict[int, dict] = {}

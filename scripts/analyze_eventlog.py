@@ -2,13 +2,22 @@
 bytes, and the gaps BETWEEN stages (driver/scheduling time no task covers).
 
 Usage: python scripts/analyze_eventlog.py /tmp/spark-events/<app-id> [top_n]
+       python scripts/analyze_eventlog.py perfbench/.work/events --jobs [PHASE]
+
+``--jobs`` prints job counts instead, grouped by call site (the name of each
+job's last stage, e.g. ``collect at /.../pipeline.py:194``).  With PHASE,
+only jobs whose ``perfbench.phase`` local property equals it are counted
+(the benchmark tags each measured unit ``m0``, ``m1``, ...).  A directory
+of application logs is read log by log, in name order.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -20,6 +29,14 @@ def _lines(path):
     JVM — no zstd CLI or python binding exists in this container."""
     import os
 
+    entries = sorted(os.listdir(path)) if os.path.isdir(path) else []
+    if entries and not any(e.startswith("events_") for e in entries):
+        # a directory of application logs (or of per-session log dirs, as
+        # the benchmark writes them): read each in name order
+        for e in entries:
+            if not e.startswith("."):
+                yield from _lines(os.path.join(path, e))
+        return
     if not os.path.isdir(path):
         with open(path) as f:
             yield from (ln.rstrip("\n") for ln in f)
@@ -69,9 +86,63 @@ def _empty_stage() -> dict:
     }
 
 
+PHASE_KEY = "perfbench.phase"  # the benchmark harness's unit tag
+
+
+def job_counts(path: str, phase: str | None = None) -> Counter:
+    """(call site, SQL action) -> jobs.  The call site is the name of the
+    job's last stage; the SQL action is the description of the root SQL
+    execution that submitted it (empty for RDD jobs), which attributes the
+    adaptive-execution sub-jobs named after a thread-pool frame to the
+    ``count``/``collect``/``parquet`` that caused them.  Only jobs tagged
+    ``perfbench.phase == phase`` are counted when phase is given."""
+    counts: Counter = Counter()
+    actions: dict[str, str] = {}
+    for line in _lines(path):
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        kind = ev.get("Event", "")
+        if kind.endswith("SQLExecutionStart"):
+            actions[str(ev["executionId"])] = ev.get("description", "")
+            continue
+        if kind != "SparkListenerJobStart":
+            continue
+        props = ev.get("Properties") or {}
+        if phase is not None and props.get(PHASE_KEY) != phase:
+            continue
+        infos = ev.get("Stage Infos") or [{"Stage ID": 0, "Stage Name": "?"}]
+        last = max(infos, key=lambda si: si["Stage ID"])
+        root = props.get("spark.sql.execution.root.id") or props.get("spark.sql.execution.id")
+        counts[(last["Stage Name"].split("\n")[0], actions.get(root or "", ""))] += 1
+    return counts
+
+
+def print_jobs(path: str, phase: str | None) -> None:
+    counts = job_counts(path, phase)
+    label = "all phases" if phase is None else f"phase {phase}"
+    print(f"{sum(counts.values())} jobs ({label}), by call site <- SQL action:")
+    for (site, action), n in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])):
+        print(f"  {n:5d}  {site}" + (f"  <-  {action}" if action and action != site else ""))
+
+
 def main() -> None:
-    path = sys.argv[1]
-    top_n = int(sys.argv[2]) if len(sys.argv) > 2 else 25
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("path", help="event log file, rolling log dir, or a dir of either")
+    ap.add_argument("top_n", nargs="?", type=int, default=25)
+    ap.add_argument(
+        "--jobs",
+        nargs="?",
+        const="",
+        metavar="PHASE",
+        help="print job counts by call site, optionally for one perfbench.phase",
+    )
+    args = ap.parse_args()
+    if args.jobs is not None:
+        print_jobs(args.path, args.jobs or None)
+        return
+    path, top_n = args.path, args.top_n
     stages = {}  # (stage_id, attempt) -> dict
     app_start = app_end = None
     if True:

@@ -90,9 +90,12 @@ def test_checkpoint_resume(spark, corpus, cfg, tmp_path):
     assert out2["clusters"].count() == n1
 
     # manifests carry lineage: per-partition counts + config hash
+    for stage, _ in ev2:
+        man = out2["_checkpointer"].manifest(stage)
+        assert sum(man["partition_counts"].values()) == man["row_count"], stage
     man = out2["_checkpointer"].manifest("candidates")
     assert man["config_hash"] == cfg.config_hash()
-    assert sum(man["partition_counts"].values()) == man["row_count"]
+    assert all(k.startswith("part=") for k in man["partition_counts"])
     assert man["parents"]["signatures"]
 
     # a changed semantic knob invalidates downstream stages
@@ -178,6 +181,53 @@ def test_checkpoint_resume_validates_data(spark, corpus, cfg, tmp_path):
     out = run_dedup(spark, corpus["pages"], cfg, checkpoint_dir=str(ck), with_golden=False)
     ev = {e["stage"]: e["action"] for e in out["_checkpointer"].events}
     assert ev["signatures"] == "computed"
+
+
+def _clusters_checksum(clusters) -> tuple[int, int]:
+    row = clusters.agg(
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64("url", "gid").cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
+
+
+def test_footer_check_recomputes_lost_and_truncated_files(spark, corpus, cfg, tmp_path):
+    """Resume trusts a snapshot only when its parquet footers add up to the
+    manifest's row count: a deleted partition file of signatures, then a
+    truncated file of candidates, each log invalid_snapshot and recompute
+    that stage alone, and the clusters match the cold run's."""
+    ck = tmp_path / "ck"
+
+    def run():
+        out = run_dedup(
+            spark, corpus["pages"], cfg, checkpoint_dir=str(ck), with_golden=False
+        )
+        ev = [(e["stage"], e["action"]) for e in out["_checkpointer"].events]
+        return _clusters_checksum(out["clusters"]), ev
+
+    cold, _ = run()
+    stages = ["signatures", "candidates", "features", "decisions", "clusters"]
+
+    def expected(bad):
+        return [
+            a
+            for s in stages
+            for a in (
+                [(s, "invalid_snapshot"), (s, "computed")] if s == bad else [(s, "resumed")]
+            )
+        ]
+
+    lost = next((ck / "signatures" / "data").glob("part=*/*.parquet"))
+    lost.unlink()
+    got, ev = run()
+    assert ev == expected("signatures")
+    assert got == cold
+
+    cut = next((ck / "candidates" / "data").glob("part=*/*.parquet"))
+    cut.write_bytes(cut.read_bytes()[: cut.stat().st_size // 2])
+    got, ev = run()
+    assert ev == expected("candidates")
+    assert got == cold
 
 
 def test_ml_decision_path_recall(spark, corpus, cfg):

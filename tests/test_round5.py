@@ -147,6 +147,53 @@ def test_checkpointer_custom_io_seam(spark, corpus, cfg, tmp_path):
     assert actions == ["invalid_snapshot", "computed"]
 
 
+def _jobs_submitted(spark, group: str, fn):
+    """fn()'s result and the number of Spark jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_builtin_stage_bookkeeping_submits_no_jobs(spark, corpus, cfg, tmp_path):
+    """On the built-in layout the manifest rides on the stage's own write: a
+    computed stage submits no more jobs than a bare parquet write of the
+    same frame, and a resumed stage submits none."""
+    frame = corpus["pages"].select(
+        "url", "text", F.pmod(F.xxhash64("url"), F.lit(4)).alias("part")
+    )
+    _, bare = _jobs_submitted(
+        spark,
+        "pin-bare-write",
+        lambda: frame.write.partitionBy("part").parquet(str(tmp_path / "bare")),
+    )
+    ck = Checkpointer(spark, tmp_path / "ck", cfg)
+    _, computed = _jobs_submitted(
+        spark,
+        "pin-computed-stage",
+        lambda: ck.stage("urls", lambda: frame, partition_by=["part"]),
+    )
+    assert ck.events[-1]["action"] == "computed"
+    assert computed <= bare, (computed, bare)
+    man = ck.manifest("urls")
+    assert man["row_count"] == corpus["pages"].count()
+    assert sum(man["partition_counts"].values()) == man["row_count"]
+
+    ck2 = Checkpointer(spark, tmp_path / "ck", cfg)
+    out, resumed = _jobs_submitted(
+        spark,
+        "pin-resumed-stage",
+        lambda: ck2.stage("urls", lambda: pytest.fail("must resume, not recompute")),
+    )
+    assert ck2.events[-1]["action"] == "resumed"
+    assert resumed == 0
+    assert out.schema.jsonValue() == man["schema"]
+
+
 def _iceberg_on_classpath(spark) -> bool:
     try:
         spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")

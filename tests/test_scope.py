@@ -98,3 +98,25 @@ def test_unresolvable_keeper_score_raises(spark):
             keeper="best",
             keeper_score=F.col("no_such_col"),
         )
+
+
+def test_failed_run_dedup_frees_its_stage_outputs(spark, monkeypatch):
+    """An exception in a later stage of the in-memory run_dedup propagates,
+    and the stage outputs it had persisted are freed along with the blocks
+    its layers held."""
+    from webdedup import pipeline
+    from webdedup.synth import generate_pages, pages_to_spark
+
+    def fail(*_args, **_kw):
+        raise RuntimeError("connected components failed")
+
+    monkeypatch.setattr(pipeline, "connected_components", fail)
+    pages_pd, _, _ = generate_pages(n_docs=60, seed=13)
+    pages = pages_to_spark(spark, pages_pd, partitions=2)
+    spark.catalog.clearCache()
+    before = _storage_ids(spark)
+    with pytest.raises(RuntimeError, match="connected components failed"):
+        pipeline.run_dedup(spark, pages, DedupConfig(), with_golden=False)
+    leaked = _storage_ids(spark) - before
+    assert not leaked, f"failed run_dedup leaked storage blocks: {leaked}"
+    assert _cache_empty(spark), "failed run_dedup left stage caches behind"

@@ -4,19 +4,29 @@ lineage + metrics, and skip-if-already-computed resume.
 The reference hands intermediate results between stages through Postgres
 tables (`df_source`, `es_scores`, `es_sbs`, `cluster_output`, ...,
 tutorial/main/stepbystep/e2e.py:242-281) — its own argument for checkpointed
-resumable stages.  Real Iceberg would give us snapshots + metadata tables;
-offline (no Iceberg jar in this image) we emulate the layout: each stage is a
-partitioned-parquet snapshot directory plus a JSON manifest recording
+resumable stages.  Offline (no Iceberg jar in this image) we emulate an
+Iceberg-shaped layout: each stage is a partitioned-parquet snapshot
+directory plus a JSON manifest with the pinned DedupConfig hash, the parent
+stages' manifest hashes (lineage), row count, per-partition row counts and
+stage metrics.  `Checkpointer.stage()` recomputes a stage only when its
+identity hash (config + parents + stage name) has no matching manifest on
+disk, so a killed run resumes from the last completed stage.
 
-  - the pinned DedupConfig hash (semantic identity of the pipeline),
-  - the parent stages' manifest hashes (lineage chain),
-  - row count and per-partition row counts (lineage + skew visibility),
-  - arbitrary stage metrics.
+The bookkeeping rides on the stage's own write; no Spark job runs after it.
+``row_count`` and any extra observed aggregates come from one
+``Observation`` on the frame the writer writes.  ``partition_counts`` are
+summed from the committed files' parquet footers, read with pyarrow, keyed
+by partition directory (``part=<k>``), or by file name when unpartitioned.
+The stage is read back with an explicit schema, so Spark infers none.  A
+resume is trusted when ``_SUCCESS`` exists and the footer row sum equals
+the manifest's ``row_count``; it reads with the manifest's schema.  A
+missing or truncated file fails the check (``invalid_snapshot``) and the
+stage recomputes.
 
-`Checkpointer.stage()` recomputes a stage only when its identity hash
-(config + parents + stage name) has no matching manifest on disk — a killed
-run resumes from the last completed stage.  The interface is kept
-Iceberg-shaped (a stage == a table write) so a real catalog can swap in.
+The ``writer=``/``reader=`` seam (a real table format) has no files to
+read footers from: it takes ``row_count`` from the same Observation but
+counts partitions with a Spark aggregate after the write and validates a
+resume with a ``count()`` through the reader.
 """
 
 from __future__ import annotations
@@ -27,8 +37,10 @@ import time
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from webdedup.config import DedupConfig
 
@@ -45,12 +57,29 @@ def _partition_counts(df: DataFrame) -> dict[str, int]:
     return {str(r["__pid"]): int(r["count"]) for r in rows}
 
 
+def _footer_counts(data_dir: Path) -> dict[str, int]:
+    """Rows per partition directory (``part=<k>``), or per file for an
+    unpartitioned stage, read from the data files' parquet footers with
+    pyarrow (no Spark job).  Hidden and underscore paths (``_SUCCESS``,
+    ``.crc``, ``_temporary``) are skipped, as Spark's own listing skips
+    them.  Raises on a file whose footer does not decode (a truncated
+    write)."""
+    counts: dict[str, int] = {}
+    for path in sorted(data_dir.rglob("*.parquet")):
+        rel = path.relative_to(data_dir)
+        if any(p.startswith(("_", ".")) for p in rel.parts):
+            continue
+        key = rel.parent.as_posix() if len(rel.parts) > 1 else rel.name
+        counts[key] = counts.get(key, 0) + pq.read_metadata(path).num_rows
+    return counts
+
+
 class Checkpointer:
     """Resumable stage runner over a snapshot directory tree.
 
     root/
-      <stage>/data/*.parquet     the snapshot
-      <stage>/manifest.json      lineage + metrics
+      <stage>/data/[part=<k>/]*.parquet   the snapshot
+      <stage>/manifest.json               lineage + metrics
     """
 
     def __init__(
@@ -66,10 +95,12 @@ class Checkpointer:
         as ``writer=lambda df, stage: df.writeTo(f"cat.db.{stage}")
         .createOrReplace()`` and ``reader=lambda stage:
         spark.table(f"cat.db.{stage}")`` — stage identity, manifests,
-        lineage, resume validation and the events log are format-agnostic
-        and stay exactly as they are (tests/test_round5.py runs the seam
-        against a real Iceberg catalog when the runtime jar is present,
-        and against a second parquet tree offline)."""
+        lineage and the events log are format-agnostic and stay exactly as
+        they are (tests/test_round5.py runs the seam against a real Iceberg
+        catalog when the runtime jar is present, and against a second
+        parquet tree offline).  The writer must write the frame it is
+        handed: that write completes the stage's Observation.  The seam's
+        partition counts and resume check cost Spark jobs (module doc)."""
         self.spark = spark
         self.root = Path(root)
         self.cfg = cfg
@@ -99,11 +130,16 @@ class Checkpointer:
         name: str,
         compute: Callable[[], DataFrame],
         parents: list[str] | None = None,
-        metrics: Callable[[DataFrame], dict] | None = None,
+        metrics: Callable[[dict], dict] | None = None,
         input_fingerprint: str = "",
         partition_by: list[str] | None = None,
+        observe: list[Column] | None = None,
     ) -> DataFrame:
-        """Run (or resume) one stage; returns the snapshot-backed DataFrame."""
+        """Run (or resume) one stage; returns the snapshot-backed DataFrame.
+
+        observe: extra aliased aggregate columns, collected by the stage's
+        write next to ``row_count``.  metrics(observed) receives them all
+        as one dict and returns the manifest's ``metrics``."""
         parents = parents or []
         identity = self._identity(name, parents, input_fingerprint)
         data_dir, manifest_path = self._paths(name)
@@ -111,51 +147,48 @@ class Checkpointer:
         if manifest_path.exists():
             manifest = json.loads(manifest_path.read_text())
             if manifest.get("identity") == identity:
-                # trust-but-verify: the manifest alone can outlive a partial
-                # overwrite of the snapshot (killed rewrite, manual
-                # deletion).  The snapshot is only resumable if the commit
-                # marker exists (parquet layout; a catalog reader validates
-                # by readability alone — its commits are atomic) AND the row
-                # count still matches what the manifest recorded; otherwise
-                # fall through and recompute.
-                if self._reader is not None or (data_dir / "_SUCCESS").exists():
-                    try:
-                        snap = self._read_stage(name, data_dir)
-                        ok = snap.count() == manifest.get("row_count")
-                    except Exception:
-                        # marker survived but the data didn't (all part
-                        # files deleted -> AnalysisException; truncated ->
-                        # decode error; dropped table): recompute rather
-                        # than wedging the run
-                        ok = False
-                    if ok:
-                        self._stage_hashes[name] = identity
-                        self.events.append({"stage": name, "action": "resumed"})
-                        return snap
+                snap = self._resume(name, data_dir, manifest)
+                if snap is not None:
+                    self._stage_hashes[name] = identity
+                    self.events.append({"stage": name, "action": "resumed"})
+                    return snap
                 self.events.append({"stage": name, "action": "invalid_snapshot"})
 
         t0 = time.time()
-        df = compute()
+        obs = Observation()
+        df = compute().observe(
+            obs, F.count(F.lit(1)).alias("row_count"), *(observe or [])
+        )
         if self._writer is not None:
             self._writer(df, name)
+            out = self._reader(name)
+            partition_counts = _partition_counts(out)
         else:
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(str(data_dir))
-        out = self._read_stage(name, data_dir)
+            # partition columns are left out of the read schema: Spark's
+            # partition discovery appends them with the types it infers
+            # from the directory names, exactly as an inferring read would
+            data_schema = StructType(
+                [f for f in df.schema if f.name not in (partition_by or [])]
+            )
+            out = self.spark.read.schema(data_schema).parquet(str(data_dir))
+            partition_counts = _footer_counts(data_dir)
+        observed = obs.get
 
         manifest = {
             "stage": name,
             "identity": identity,
             "config_hash": self.config_hash,
             "parents": {p: self._stage_hashes.get(p, p) for p in parents},
-            "row_count": out.count(),
-            "partition_counts": _partition_counts(out),
+            "row_count": observed["row_count"],
+            "partition_counts": partition_counts,
             "schema": out.schema.jsonValue(),
             "wall_seconds": round(time.time() - t0, 3),
             "written_at_unix": int(time.time()),
-            "metrics": (metrics(out) if metrics else {}),
+            "metrics": (metrics(observed) if metrics else {}),
         }
         manifest_path.parent.mkdir(parents=True, exist_ok=True)
         manifest_path.write_text(json.dumps(manifest, indent=2, default=str))
@@ -163,10 +196,27 @@ class Checkpointer:
         self.events.append({"stage": name, "action": "computed"})
         return out
 
-    def _read_stage(self, name: str, data_dir: Path) -> DataFrame:
-        if self._reader is not None:
-            return self._reader(name)
-        return self.spark.read.parquet(str(data_dir))
+    def _resume(self, name: str, data_dir: Path, manifest: dict) -> DataFrame | None:
+        """The stored snapshot, or None when it cannot be trusted: the
+        manifest alone can outlive a partial overwrite of the snapshot
+        (killed rewrite, manual deletion).  A catalog's commits are atomic,
+        so the seam checks the table's count alone."""
+        rows = manifest.get("row_count")
+        try:
+            if self._reader is not None:
+                snap = self._reader(name)
+                return snap if snap.count() == rows else None
+            if not (data_dir / "_SUCCESS").exists():
+                return None
+            if sum(_footer_counts(data_dir).values()) != rows:
+                return None
+            schema = StructType.fromJson(manifest["schema"])
+            return self.spark.read.schema(schema).parquet(str(data_dir))
+        except Exception:
+            # marker survived but the data didn't (truncated file -> footer
+            # decode error; dropped table; unreadable manifest schema):
+            # recompute rather than wedging the run
+            return None
 
     def manifest(self, stage: str) -> dict:
         _, manifest_path = self._paths(stage)

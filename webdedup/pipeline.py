@@ -35,6 +35,9 @@ from webdedup.scope import Scope
 from webdedup.signatures import compute_signatures
 from webdedup.triage import triage_rule
 
+# provenance tags of the candidate sources run_dedup unions
+_METHODS = ("exact", "minhash", "simhash", "substring")
+
 
 def _column_identity(df: DataFrame, col) -> str:
     """Stable identity string for a Column expression: the pretty-SQL name
@@ -88,10 +91,10 @@ def run_dedup(
     repartition, triage collects its thresholds, CC iterates) and frees
     every block it holds internally (substring key tables, the feature doc
     side, the CC star forest) before returning, or as an exception
-    unwinds; only the stage outputs it returns stay cached.  A caller that
-    wants ONE stage lazily should call that stage's function directly
-    (compute_signatures, candidates.minhash_candidates, ...) — they
-    compose on plain DataFrames.
+    unwinds; only the stage outputs it returns stay cached, and those too
+    are freed if a later stage raises.  A caller that wants ONE stage
+    lazily should call that stage's function directly (compute_signatures,
+    candidates.minhash_candidates, ...) — they compose on plain DataFrames.
     """
     if decision not in ("rule", "ml"):
         raise ValueError("decision must be 'rule' or 'ml'")
@@ -105,6 +108,8 @@ def run_dedup(
     )
     fp = input_fingerprint(pages, ["url"]) if ckpt else ""
 
+    stages = Scope()
+
     def staged(name, fn, parents=None, extra="", **kw):
         if ckpt:
             return ckpt.stage(
@@ -112,7 +117,7 @@ def run_dedup(
             )
         # no checkpoint dir: persist in memory/disk — each stage feeds several
         # consumers (e.g. signatures -> minhash + simhash candidate sources)
-        return fn().persist()
+        return stages.persist(fn())
 
     # Checkpoint tables are hash-partitioned by url (Iceberg-shaped layout,
     # SURVEY §4.2): resume and downstream scans read a bounded, pruned file
@@ -123,25 +128,26 @@ def run_dedup(
     def _with_part(df: DataFrame, col: str) -> DataFrame:
         return df.withColumn("part", F.pmod(F.xxhash64(col), F.lit(_PART_N)))
 
-    # -- 1. signatures -------------------------------------------------------
-    # the part column exists only on the checkpointed layout: in-memory
-    # stages persist the frame AS RETURNED, so the caller's unpersist on the
-    # dict entry releases the actual cache (a drop() AFTER persist would
-    # hand out a child plan whose unpersist misses the cached parent)
-    signatures = staged(
-        "signatures",
-        (lambda: _with_part(compute_signatures(pages, cfg), "url"))
-        if ckpt
-        else (lambda: compute_signatures(pages, cfg)),
-        partition_by=["part"] if ckpt else None,
-    )
-    if ckpt:
-        signatures = signatures.drop("part")
-
-    # three block scopes, each closed where its blocks die (all of them if
-    # an exception unwinds): substring key tables, the feature stage's doc
+    # four block scopes, each closed where its blocks die (all of them if
+    # an exception unwinds): the in-memory stage outputs (handed to the
+    # caller on success), substring key tables, the feature stage's doc
     # side, the CC star forest
-    with Scope() as keys, Scope() as doc_side, Scope() as cc:
+    with stages, Scope() as keys, Scope() as doc_side, Scope() as cc:
+        # -- 1. signatures ---------------------------------------------------
+        # the part column exists only on the checkpointed layout: in-memory
+        # stages persist the frame AS RETURNED, so the caller's unpersist on the
+        # dict entry releases the actual cache (a drop() AFTER persist would
+        # hand out a child plan whose unpersist misses the cached parent)
+        signatures = staged(
+            "signatures",
+            (lambda: _with_part(compute_signatures(pages, cfg), "url"))
+            if ckpt
+            else (lambda: compute_signatures(pages, cfg)),
+            partition_by=["part"] if ckpt else None,
+        )
+        if ckpt:
+            signatures = signatures.drop("part")
+
         # -- 2. candidates (four sources, provenance-tagged) -----------------
         skew_sources: list[DataFrame] = []
 
@@ -170,7 +176,7 @@ def run_dedup(
                 cand.union_candidates(*sources), cand.doc_ids(pages)
             )
 
-        def candidate_metrics(_out: DataFrame) -> dict:
+        def candidate_metrics(_observed: dict) -> dict:
             """Per-method dropped skew mass -> the stage manifest, so a run can
             audit what the bucket caps cost (north rule: capped mass is
             reported, never silent).  Cost: the minhash/simhash skew aggregates
@@ -228,21 +234,21 @@ def run_dedup(
             doc_side.close()
 
         # -- 4. decision: rule triage, or the learned question-loop path -----
-        def decision_metrics(out_df: DataFrame) -> dict:
-            """Per-method positive-pair attribution -> the stage manifest
-            (the tiered-dedup audit: which candidate source the accepted
-            pairs came from, so a run can see what each tier of the
-            cascade paid for) — recorded for BOTH decision paths, so an ml
-            run keeps the same audit trail a rule run has.  Bounded collect:
-            <= one row per method."""
-            rows = (
-                out_df.where(F.col("is_dup") == 1)
-                .select(F.explode("methods").alias("method"))
-                .groupBy("method")
-                .count()
-                .collect()
-            )
-            m: dict = {"positive_pairs_by_method": {r["method"]: r["count"] for r in rows}}
+        # per-method positive-pair attribution -> the decisions manifest (the
+        # tiered-dedup audit: which candidate source the accepted pairs came
+        # from, so a run can see what each tier of the cascade paid for),
+        # observed by the stage's own write — recorded for BOTH decision
+        # paths, so an ml run keeps the same audit trail a rule run has
+        positives = [
+            F.count_if(
+                (F.col("is_dup") == 1) & F.array_contains("methods", m)
+            ).alias(f"positive_{m}")
+            for m in _METHODS
+        ]
+
+        def decision_metrics(observed: dict) -> dict:
+            counts = {k: observed[f"positive_{k}"] for k in _METHODS}
+            m: dict = {"positive_pairs_by_method": {k: n for k, n in counts.items() if n}}
             if decision == "ml":
                 # the learned path's knobs belong in the manifest next to its
                 # output: budget size and CV choice explain WHY these decisions
@@ -261,26 +267,30 @@ def run_dedup(
             truth_fp = (
                 input_fingerprint(truth_pairs, ["url_a", "url_b"]) if ckpt else ""
             )
-            decided = staged(
-                "decisions",
-                lambda: run_ml_decision(
+            extra = f":decision=ml:q={n_questions}:cv={cross_validate}:truth={truth_fp}"
+
+            def decide() -> DataFrame:
+                return run_ml_decision(
                     features,
                     truth_pairs,
                     cfg,
                     n_questions=n_questions,
                     cross_validate=cross_validate,
-                ),
-                parents=["features"],
-                extra=f":decision=ml:q={n_questions}:cv={cross_validate}:truth={truth_fp}",
-                metrics=decision_metrics if ckpt else None,
-            )
+                )
         else:
-            decided = staged(
-                "decisions",
-                lambda: triage_rule(features, cfg),
-                parents=["features"],
-                metrics=decision_metrics if ckpt else None,
-            )
+            extra = ""
+
+            def decide() -> DataFrame:
+                return triage_rule(features, cfg)
+
+        decided = staged(
+            "decisions",
+            decide,
+            parents=["features"],
+            extra=extra,
+            metrics=decision_metrics,
+            observe=positives,
+        )
         matches = decided.where(F.col("is_dup") == 1)
 
         # -- 5. connected components -> gid ----------------------------------
@@ -306,45 +316,49 @@ def run_dedup(
             doc_side.close()
         cc.close()
 
-    out: dict[str, DataFrame] = {
-        "signatures": signatures,
-        "candidates": pairs,
-        "features": features,
-        "decisions": decided,
-        "clusters": clusters,
-    }
+        out: dict[str, DataFrame] = {
+            "signatures": signatures,
+            "candidates": pairs,
+            "features": features,
+            "decisions": decided,
+            "clusters": clusters,
+        }
 
-    # -- 6. keeper: golden-record synthesis, or keep-best-copy ---------------
-    if with_golden:
-        clustered = pages.join(clusters, "url")
-        if keeper == "best":
-            score = (
-                keeper_score
-                if keeper_score is not None
-                else default_keeper_score("text")
-            )
-            out["keepers"] = staged(
-                "keepers",
-                lambda: keep_best(
-                    clustered.withColumn("keeper_score", score).select(
-                        "url", "gid", "keeper_score"
+        # -- 6. keeper: golden-record synthesis, or keep-best-copy -----------
+        if with_golden:
+            clustered = pages.join(clusters, "url")
+            if keeper == "best":
+                score = (
+                    keeper_score
+                    if keeper_score is not None
+                    else default_keeper_score("text")
+                )
+                out["keepers"] = staged(
+                    "keepers",
+                    lambda: keep_best(
+                        clustered.withColumn("keeper_score", score).select(
+                            "url", "gid", "keeper_score"
+                        ),
+                        "keeper_score",
                     ),
-                    "keeper_score",
-                ),
-                parents=["clusters"],
-                # the score EXPRESSION is part of the stage identity: a
-                # resume with a different quality score must recompute
-                extra=f":keeper_score={_column_identity(clustered, score)}",
-            )
-        else:
-            out["golden"] = staged(
-                "golden",
-                lambda: golden_records(
-                    clustered,
-                    policies={"url": "first", "text": "first", "lang": "popularity"},
-                ),
-                parents=["clusters"],
-            )
+                    parents=["clusters"],
+                    # the score EXPRESSION is part of the stage identity: a
+                    # resume with a different quality score must recompute
+                    extra=f":keeper_score={_column_identity(clustered, score)}",
+                )
+            else:
+                out["golden"] = staged(
+                    "golden",
+                    lambda: golden_records(
+                        clustered,
+                        policies={"url": "first", "text": "first", "lang": "popularity"},
+                    ),
+                    parents=["clusters"],
+                )
+
+        if not ckpt:
+            for df in out.values():
+                stages.detach(df)
 
     if ckpt:
         out["_checkpointer"] = ckpt  # type: ignore[assignment]
