@@ -34,3 +34,21 @@ def corpus(spark):
         "pages_pd": pages_pd,
         "truth_pairs_pd": truth_pairs,
     }
+
+
+@pytest.fixture(scope="session")
+def jobs_submitted(spark):
+    """run(group, fn) -> (fn()'s result, the number of Spark jobs it
+    submitted), counted through the job group's status tracker."""
+    sc = spark.sparkContext
+
+    def run(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -127,3 +127,20 @@ def test_keep_best_highest_score_smallest_id_tie(spark):
     out = keep_best(df, "score")
     assert out.columns == ["gid", "url", "score"]
     assert out.count() == 2
+
+
+def test_cc_single_task_path_submits_no_count_job(spark, jobs_submitted):
+    """The contracted edge count is observed on the contraction's own
+    checkpoint and the single-task pass emits every node: on the 60-edge
+    chain only the two checkpoints run (6 jobs before, with a count job)."""
+    nodes = [f"c{i:03d}" for i in range(61)]
+    edges = spark.createDataFrame(pd.DataFrame({"url_a": nodes[:-1], "url_b": nodes[1:]}))
+    edges.count()
+    with Scope() as scope:
+        comp, n = jobs_submitted(
+            "pin-cc-chain", lambda: connected_components(edges, scope=scope)
+        )
+        got = {r["url"]: r["gid"] for r in comp.collect()}
+        assert comp.count() == len(got) == 61  # one row per node, no duplicates
+    assert set(got.values()) == {"c000"}
+    assert n <= 4, n

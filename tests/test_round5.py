@@ -147,33 +147,21 @@ def test_checkpointer_custom_io_seam(spark, corpus, cfg, tmp_path):
     assert actions == ["invalid_snapshot", "computed"]
 
 
-def _jobs_submitted(spark, group: str, fn):
-    """fn()'s result and the number of Spark jobs it submitted."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_builtin_stage_bookkeeping_submits_no_jobs(spark, corpus, cfg, tmp_path):
+def test_builtin_stage_bookkeeping_submits_no_jobs(
+    spark, corpus, cfg, tmp_path, jobs_submitted
+):
     """On the built-in layout the manifest rides on the stage's own write: a
     computed stage submits no more jobs than a bare parquet write of the
     same frame, and a resumed stage submits none."""
     frame = corpus["pages"].select(
         "url", "text", F.pmod(F.xxhash64("url"), F.lit(4)).alias("part")
     )
-    _, bare = _jobs_submitted(
-        spark,
+    _, bare = jobs_submitted(
         "pin-bare-write",
         lambda: frame.write.partitionBy("part").parquet(str(tmp_path / "bare")),
     )
     ck = Checkpointer(spark, tmp_path / "ck", cfg)
-    _, computed = _jobs_submitted(
-        spark,
+    _, computed = jobs_submitted(
         "pin-computed-stage",
         lambda: ck.stage("urls", lambda: frame, partition_by=["part"]),
     )
@@ -184,8 +172,7 @@ def test_builtin_stage_bookkeeping_submits_no_jobs(spark, corpus, cfg, tmp_path)
     assert sum(man["partition_counts"].values()) == man["row_count"]
 
     ck2 = Checkpointer(spark, tmp_path / "ck", cfg)
-    out, resumed = _jobs_submitted(
-        spark,
+    out, resumed = jobs_submitted(
         "pin-resumed-stage",
         lambda: ck2.stage("urls", lambda: pytest.fail("must resume, not recompute")),
     )

@@ -17,7 +17,7 @@ invariant).  Golden-record aggregation maps suricate/grouping.py:224-322
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from webdedup.scope import Scope
@@ -81,7 +81,9 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _local_contract(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def _local_contract(
+    edges: DataFrame, num_partitions: int | None = None, with_roots: bool = False
+) -> DataFrame:
     """Partition-local union-find contraction: one shuffle + one python pass.
 
     Edges are hash-partitioned by url_a; within each partition a union-find
@@ -91,6 +93,10 @@ def _local_contract(edges: DataFrame, num_partitions: int | None = None) -> Data
     depth-1 stars, so the star rounds that follow converge in 1-2 rounds on
     typical dup graphs instead of O(log^2).  Memory per partition is
     O(nodes in partition) — bounded by choosing enough partitions at scale.
+
+    with_roots=True also emits (root, root) for every root: each node seen
+    appears exactly once as url_b, so a single-partition pass is already the
+    final (gid, url) membership.
     """
     import pandas as pd
 
@@ -120,7 +126,7 @@ def _local_contract(edges: DataFrame, num_partitions: int | None = None) -> Data
         out_a, out_b = [], []
         for node in parent:
             root = find(node)
-            if root != node:
+            if with_roots or root != node:
                 out_a.append(root)
                 out_b.append(node)
         yield pd.DataFrame({"url_a": out_a, "url_b": out_b})
@@ -143,15 +149,18 @@ def connected_components(
     """edges(url_a, url_b) -> (url, gid) for every node appearing in edges.
 
     Adaptive: a partition-local union-find contraction runs first (one
-    pass).  If the contracted edge set fits one task
-    (SINGLE_TASK_EDGE_LIMIT), a final single-partition union-find finishes
-    exactly — no iterative rounds, which on small/medium graphs are pure
-    scheduler overhead (measured 12 s for 34k edges).  Larger graphs take
-    the alternating large-star/small-star rounds (Kiveris et al., SoCC'14)
-    to a checksum fixpoint; each round localCheckpoints to cut lineage.
-    At 10^12-doc scale the edge set takes the iterative path; the
-    contraction output is one edge per non-root node, so the single-task
-    cutoff is really a bound on component-member count.
+    pass).  Its edge count is taken by an Observation on the contraction's
+    own localCheckpoint, not by a separate count job.  If the contracted
+    edge set fits one task (SINGLE_TASK_EDGE_LIMIT), a final
+    single-partition union-find finishes exactly — no iterative rounds,
+    which on small/medium graphs are pure scheduler overhead (measured 12 s
+    for 34k edges) — and emits (url, gid) for every node, roots included,
+    so its checkpoint is the result as is.  Larger graphs take the
+    alternating large-star/small-star rounds (Kiveris et al., SoCC'14) to a
+    checksum fixpoint; each round localCheckpoints to cut lineage.  At
+    10^12-doc scale the edge set takes the iterative path; the contraction
+    output is one edge per non-root node, so the single-task cutoff is
+    really a bound on component-member count.
 
     scope: holds the localCheckpoint the RESULT still reads (the fixpoint
     star forest / the single-task union-find output); close it after
@@ -159,27 +168,28 @@ def connected_components(
     rounds are released here the moment the next round materializes.
     """
     cur = edges.select("url_a", "url_b").where(F.col("url_a") != F.col("url_b"))
-    cur = scope.checkpoint(_local_contract(cur))
+    obs = Observation()
+    cur = scope.checkpoint(
+        _local_contract(cur).observe(obs, F.count(F.lit(1)).alias("n"))
+    )
 
-    n_edges = cur.count()
+    n_edges = obs.get["n"]
     if n_edges == 0:
-        # no isEmpty() pre-check: that was a separate driver action forcing
-        # a partial computation of the whole upstream pipeline before the
-        # contraction ran; the contraction of an empty edge set is empty,
-        # so the count above answers both questions in one job
+        # the contraction of an empty edge set is empty, so the observed
+        # count answers the emptiness question without a job of its own
         scope.release(cur)
         return edges.sparkSession.createDataFrame([], "url string, gid string")
     if n_edges <= SINGLE_TASK_EDGE_LIMIT:
         # contracted graph is small: one exact union-find pass, no rounds
-        final = scope.checkpoint(_local_contract(cur, num_partitions=1))
+        final = scope.checkpoint(
+            _local_contract(cur, num_partitions=1, with_roots=True).select(
+                F.col("url_b").alias("url"), F.col("url_a").alias("gid")
+            )
+        )
         # localCheckpoint is eager: final is materialized, the contraction
         # checkpoint is dead NOW; final's blocks serve the return value
         scope.release(cur)
-        membership = final.select(
-            F.col("url_b").alias("url"), F.col("url_a").alias("gid")
-        )
-        roots = final.select(F.col("url_a").alias("url"), F.col("url_a").alias("gid"))
-        return membership.unionByName(roots).distinct()
+        return final
     prev_sig = None
     for _ in range(max_iterations):
         nxt = _large_star(_symmetrize(cur))

@@ -35,7 +35,7 @@ from functools import reduce
 from pathlib import Path
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig
@@ -48,6 +48,12 @@ from webdedup.signatures import compute_signatures
 _BLOOM_M = 1 << 20
 _BLOOM_K = 6
 _INDEX_PARTS = 16
+
+# the file columns process_batch writes (state) and _write_epoch_index
+# writes (index, under part=<k> directories): reads pin them instead of
+# paying a schema-inference job per read
+_STATE_COLS = "url string, shingles array<bigint>, bands array<bigint>, gid string"
+_INDEX_COLS = "ref_url string, ref_gid string, key_idx int, key_hash bigint, k64 bigint"
 
 
 def _state_path(state_dir: str) -> Path:
@@ -82,6 +88,41 @@ def _committed_epochs(state_dir: str) -> list[int]:
     )
 
 
+def _check_footer(directory: Path, columns: str) -> None:
+    """Raise ValueError unless one data file under ``directory`` holds
+    exactly ``columns`` (a ``name type, ...`` list).  A pinned read schema
+    would turn a missing or retyped column into silent nulls; one footer
+    read on the driver (no Spark job) turns it into an error instead.  A
+    directory without data files has nothing to misread and passes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def spark_type(t) -> str:
+        if pa.types.is_list(t):
+            return f"array<{spark_type(t.value_type)}>"
+        return {"int64": "bigint", "int32": "int"}.get(str(t), str(t))
+
+    # any file Spark would read: it skips every path with a component
+    # starting with "_" or "." (_SUCCESS, .crc files, _temporary/ dirs)
+    data = next(
+        (
+            f for f in directory.rglob("*")
+            if f.is_file()
+            and not any(p[0] in "_." for p in f.relative_to(directory).parts)
+        ),
+        None,
+    )
+    if data is None:
+        return
+    expected = dict(c.split(" ", 1) for c in columns.split(", "))
+    found = {f.name: spark_type(f.type) for f in pq.read_schema(data)}
+    if found != expected:
+        raise ValueError(
+            f"{directory} does not hold the columns the engine writes: "
+            f"expected {expected}, found {found} (in {data.name})"
+        )
+
+
 def read_state(
     spark: SparkSession, state_dir: str, before_epoch: int | None = None
 ) -> DataFrame | None:
@@ -90,14 +131,20 @@ def read_state(
     State is one parquet directory PER EPOCH, each with its own _SUCCESS
     commit marker — a crashed/replayed batch can never half-append into an
     already-committed epoch (the epoch-idempotency contract; see
-    process_batch).  Uncommitted (markerless) directories are ignored."""
+    process_batch).  Uncommitted (markerless) directories are ignored.
+
+    The read schema is pinned to the one process_batch writes (no
+    schema-inference job); each epoch directory's footer is checked against
+    it first, and a mismatch raises ValueError naming the directory."""
     epochs = _committed_epochs(state_dir)
     if before_epoch is not None:
         epochs = [e for e in epochs if e < before_epoch]
     if not epochs:
         return None
-    p = _state_path(state_dir)
-    return spark.read.parquet(*[str(p / f"epoch={e}") for e in epochs])
+    dirs = [_state_path(state_dir) / f"epoch={e}" for e in epochs]
+    for d in dirs:
+        _check_footer(d, _STATE_COLS)
+    return spark.read.schema(_STATE_COLS).parquet(*map(str, dirs))
 
 
 def _exploded_keys(sigs: DataFrame, extra: list[str]) -> DataFrame:
@@ -191,12 +238,18 @@ def _read_index(
     """The band-key index rows covered by (high, tail) — one read per source
     root (a single multi-root read would try to reconcile the merged=/epoch=
     directory names as conflicting partition columns), unioned by name.
-    Callers' column prunes / part filters push down through the Union."""
+    Callers' column prunes / part filters push down through the Union.
+    Reads pin the writer's schema, checked against one footer per root."""
+    roots = _index_source_roots(state_dir, high, tail)
+    for s in roots:
+        _check_footer(Path(s), _INDEX_COLS)
     return reduce(
         lambda a, b: a.unionByName(b),
         [
-            spark.read.option("basePath", s).parquet(s)
-            for s in _index_source_roots(state_dir, high, tail)
+            spark.read.schema(f"{_INDEX_COLS}, part int")
+            .option("basePath", s)
+            .parquet(s)
+            for s in roots
         ],
     )
 
@@ -314,8 +367,9 @@ def _match_against_index(
 
     bkeys = _exploded_keys(batch_sigs, ["url", "shingles"])
     # the probe is a map-side pandas UDF over the (small) batch keys; it
-    # runs once for the parts collect and once in the final plan — cheaper
-    # than owning a persist lifecycle across the caller's state write
+    # runs twice, once for the parts collect and once inside the caller's
+    # `assigned` checkpoint — cheaper than owning a persist lifecycle
+    # across the caller's state write
     survivors = (
         probe_bloom(bkeys, "k64", bloom, "__maybe")
         .where(F.col("__maybe"))
@@ -382,6 +436,30 @@ def _match_against(
     return verified.groupBy("url").agg(F.min("ref_gid").alias("gid"))
 
 
+def _assign_gids(
+    batch_urls: DataFrame, matched: DataFrame, internal: DataFrame
+) -> DataFrame:
+    """(url, gid) for every batch url: its own state match wins; else the
+    min state gid matched anywhere in its batch-internal component; else
+    the component's gid; else its own url (it founds a new group).
+
+    One window over coalesce(igid, url) computes the component minimum, so
+    the match plan under ``matched`` is planned and run once (a groupBy
+    joined back to its own input would run it twice).  An unmatched-by-CC
+    row (null igid) is a one-row partition: its url is no component's gid,
+    since every node of a component carries a non-null igid."""
+    assign = batch_urls.join(matched, "url", "left").join(
+        internal.withColumnRenamed("gid", "igid"), "url", "left"
+    )
+    component = Window.partitionBy(F.coalesce(F.col("igid"), F.col("url")))
+    return assign.select(
+        "url",
+        F.coalesce(
+            F.col("gid"), F.min("gid").over(component), F.col("igid"), F.col("url")
+        ).alias("gid"),
+    )
+
+
 def process_batch(
     spark: SparkSession,
     batch: DataFrame,
@@ -401,13 +479,15 @@ def process_batch(
     may omit epoch_id (auto: next uncommitted epoch).
 
     BLOCK LIFECYCLE: everything the batch caches or checkpoints lives in
-    one scope over the whole body.  The CC star forest is freed right after
-    the assignment's localCheckpoint, the signature and new-state caches
-    once the epoch is committed.  On success only the returned frame
-    outlives the call: it is localCheckpoint-backed (one batch-sized block
-    set), and once the caller has consumed it (collect / write / copied
-    into another materialization) it calls ``release_batch(assigned)`` —
-    otherwise each micro-batch leaves its block set to driver GC.
+    one scope over the whole body.  The match plan (bloom probe, index
+    join, state-shingle verify) is planned and run once, inside the
+    assignment's localCheckpoint.  The CC star forest is freed right after
+    that checkpoint, the signature and new-state caches once the epoch is
+    committed.  On success only the returned frame outlives the call: it
+    is localCheckpoint-backed (one batch-sized block set), and once the
+    caller has consumed it (collect / write / copied into another
+    materialization) it calls ``release_batch(assigned)`` — otherwise
+    each micro-batch leaves its block set to driver GC.
     run_incremental's foreachBatch does this automatically.  On any
     exception every block the batch created is freed before it
     propagates."""
@@ -421,18 +501,14 @@ def process_batch(
         sigs = held.persist(compute_signatures(batch, cfg))
         state = read_state(spark, state_dir, before_epoch=epoch_id)
 
-        # 1. batch-internal grouping (new records may duplicate each other)
-        internal_pairs, _ = minhash_candidates(sigs, cfg)
-        sh = sigs.select("url", "shingles")
+        # 1. batch-internal grouping (new records may duplicate each other),
+        #    verified in did space: one join per side fetches url AND
+        #    shingles (collision posture: candidates.doc_ids)
+        internal_pairs, _ = minhash_candidates(sigs, cfg, did_pairs=True)
+        docs = sigs.select(F.xxhash64("url"), "url", "shingles")
         verified = (
-            internal_pairs.join(
-                sh.select(F.col("url").alias("url_a"), F.col("shingles").alias("sh_a")),
-                "url_a",
-            )
-            .join(
-                sh.select(F.col("url").alias("url_b"), F.col("shingles").alias("sh_b")),
-                "url_b",
-            )
+            internal_pairs.join(docs.toDF("did_a", "url_a", "sh_a"), "did_a")
+            .join(docs.toDF("did_b", "url_b", "sh_b"), "did_b")
             .where(
                 jaccard_sketch(F.col("sh_a"), F.col("sh_b"), cfg.shingle_sketch_k)
                 >= cfg.jaccard_threshold
@@ -455,33 +531,12 @@ def process_batch(
         else:
             matched = spark.createDataFrame([], "url string, gid string")
 
-        # 3. assembly: state gid wins; else batch-internal component
-        #    propagated through min matched gid; else own url (founds a new
-        #    group)
-        assign = (
-            sigs.select("url")
-            .join(matched, "url", "left")
-            .join(internal.withColumnRenamed("gid", "igid"), "url", "left")
-        )
-        # propagate a matched gid to the whole internal component
-        comp_gid = (
-            assign.where(F.col("igid").isNotNull() & F.col("gid").isNotNull())
-            .groupBy("igid")
-            .agg(F.min("gid").alias("cgid"))
-        )
-        # materialize ONCE (batch-sized blocks): the state write below and
-        # the caller's read both consume assigned — without this each
-        # recomputes the whole match plan, and the CC star forest behind
-        # `internal` could never be freed (one leaked block set per
-        # micro-batch over a stream's lifetime)
-        assigned = held.checkpoint(
-            assign.join(comp_gid, "igid", "left")
-            .withColumn(
-                "gid",
-                F.coalesce(F.col("gid"), F.col("cgid"), F.col("igid"), F.col("url")),
-            )
-            .select("url", "gid")
-        )
+        # 3. assembly.  Materialize ONCE (batch-sized blocks): the state
+        #    write below and the caller's read both consume assigned —
+        #    without this each recomputes the whole match plan, and the CC
+        #    star forest behind `internal` could never be freed (one leaked
+        #    block set per micro-batch over a stream's lifetime)
+        assigned = held.checkpoint(_assign_gids(sigs.select("url"), matched, internal))
         cc.close()
 
         new_state = held.persist(
