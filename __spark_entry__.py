@@ -910,8 +910,8 @@ def q_dedup_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         signatures = compute_signatures(pages, cfg)
-        mh, mh_skew = minhash_candidates(signatures, cfg, did_pairs=True)
-        sh, sh_skew = simhash_candidates(signatures, cfg, did_pairs=True)
+        mh, mh_skew = minhash_candidates(signatures, cfg)
+        sh, sh_skew = simhash_candidates(signatures, cfg)
         # materialize each candidate set ONCE: the tier aggregate and the
         # oracle-binding export below both consume it (blocks freed with the
         # scope, after the output materializes)

@@ -18,8 +18,14 @@ from webdedup.signatures import compute_signatures
 
 
 @pytest.fixture(scope="module")
-def result(spark, corpus, cfg):
-    return run_dedup(spark, corpus["pages"], cfg)
+def memory_run(spark, corpus, cfg, jobs_submitted):
+    """The in-memory run the tests here read, and the Spark jobs it took."""
+    return jobs_submitted("e2e-memory", lambda: run_dedup(spark, corpus["pages"], cfg))
+
+
+@pytest.fixture(scope="module")
+def result(memory_run):
+    return memory_run[0]
 
 
 def test_recall_vs_planted_truth(spark, corpus, result):
@@ -77,17 +83,42 @@ def test_candidates_carry_provenance(result):
     assert "substring" in methods or "simhash" in methods
 
 
-def test_checkpoint_resume(spark, corpus, cfg, tmp_path):
+def _rows(df) -> list[tuple]:
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+    )
+
+
+def test_checkpoint_resume(spark, corpus, cfg, tmp_path, memory_run, jobs_submitted):
+    """Cold and resumed checkpointed runs, against the in-memory run: one
+    code path over two stage stores returns the same keys, the same columns
+    (never the checkpoint layout's `part`) and the same clusters and
+    decisions rows.  Job pins: the runner that branched on the store
+    submitted 66 jobs in memory, 64 checkpointed and 2 on resume here."""
     ck = str(tmp_path / "ck")
-    out1 = run_dedup(spark, corpus["pages"], cfg, checkpoint_dir=ck, with_golden=False)
+    out1, cold_jobs = jobs_submitted(
+        "resume-cold", lambda: run_dedup(spark, corpus["pages"], cfg, checkpoint_dir=ck)
+    )
     ev1 = [(e["stage"], e["action"]) for e in out1["_checkpointer"].events]
     assert all(a == "computed" for _, a in ev1)
     n1 = out1["clusters"].count()
 
-    out2 = run_dedup(spark, corpus["pages"], cfg, checkpoint_dir=ck, with_golden=False)
+    out2, warm_jobs = jobs_submitted(
+        "resume-warm", lambda: run_dedup(spark, corpus["pages"], cfg, checkpoint_dir=ck)
+    )
     ev2 = [(e["stage"], e["action"]) for e in out2["_checkpointer"].events]
     assert all(a == "resumed" for _, a in ev2)
     assert out2["clusters"].count() == n1
+
+    mem, mem_jobs = memory_run
+    jobs = (mem_jobs, cold_jobs, warm_jobs)
+    assert mem_jobs <= 66 and cold_jobs <= 64 and warm_jobs <= 2, jobs
+    assert {*mem, "_checkpointer"} == out1.keys() == out2.keys()
+    for k in mem:
+        assert mem[k].columns == out1[k].columns == out2[k].columns, k
+        assert "part" not in mem[k].columns, k
+    for k in ("clusters", "decisions"):
+        assert _rows(mem[k]) == _rows(out1[k]) == _rows(out2[k]), k
 
     # manifests carry lineage: per-partition counts + config hash
     for stage, _ in ev2:
@@ -104,7 +135,6 @@ def test_checkpoint_resume(spark, corpus, cfg, tmp_path):
         corpus["pages"],
         DedupConfig(jaccard_threshold=0.6),
         checkpoint_dir=ck,
-        with_golden=False,
     )
     ev3 = [(e["stage"], e["action"]) for e in out3["_checkpointer"].events]
     assert all(a == "computed" for _, a in ev3)

@@ -371,10 +371,12 @@ def test_windowed_stream_watermark(spark, tmp_path):
 
 def test_band_key_index_matches_legacy_explode(spark, tmp_path):
     """The band-key-index probe (bloom prune + partition-pruned index read)
-    must assign exactly what the legacy full-state explode assigns — the
-    index is a pure access-path change.  Legacy is forced by deleting one
-    epoch's bloom file (mixed/older layouts fall back wholesale)."""
-    from webdedup.streaming import _bloom_file, _index_path, process_batch
+    must match exactly what a full-state explode join matches — the index
+    is a pure access-path change; the explode join is the oracle.  State
+    that no index covers (an epoch's bloom file deleted) raises."""
+    from webdedup import streaming as st
+    from webdedup.features import jaccard_sketch
+    from webdedup.signatures import compute_signatures
     from webdedup.synth import generate_pages, pages_to_spark
 
     cfg = DedupConfig()
@@ -382,22 +384,41 @@ def test_band_key_index_matches_legacy_explode(spark, tmp_path):
     sdf = pages_to_spark(spark, pages_pd)
     b1 = sdf.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
     b2 = sdf.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 1)
+    state_dir = str(tmp_path / "state")
+    st.process_batch(spark, b1, state_dir, cfg, epoch_id=0).count()
 
-    def drive(state_dir: str, force_legacy: bool) -> set:
-        process_batch(spark, b1, state_dir, cfg, epoch_id=0).count()
-        if force_legacy:
-            _bloom_file(state_dir, 0).unlink()
-        return {
-            (r["url"], r["gid"])
-            for r in process_batch(spark, b2, state_dir, cfg, epoch_id=1).collect()
-        }
+    sigs = compute_signatures(b2, cfg)
+    cov = st._index_coverage(state_dir, [0])
+    indexed = st._match_against_index(spark, sigs, state_dir, cov, cfg)
 
-    indexed = drive(str(tmp_path / "s_idx"), force_legacy=False)
-    legacy = drive(str(tmp_path / "s_leg"), force_legacy=True)
-    assert indexed == legacy
-    # the index artifacts exist for committed epochs in the indexed run
-    assert (_index_path(str(tmp_path / "s_idx")) / "epoch=0" / "_SUCCESS").exists()
-    assert _bloom_file(str(tmp_path / "s_idx"), 1).exists()
+    b = sigs.select(
+        "url", "shingles", F.posexplode("bands").alias("key_idx", "key_hash")
+    )
+    r = st.read_state(spark, state_dir).select(
+        F.col("gid").alias("ref_gid"),
+        F.col("shingles").alias("ref_shingles"),
+        F.posexplode("bands").alias("key_idx", "key_hash"),
+    )
+    explode = (
+        b.join(r, ["key_idx", "key_hash"])
+        .where(
+            jaccard_sketch(F.col("shingles"), F.col("ref_shingles"), cfg.shingle_sketch_k)
+            >= cfg.jaccard_threshold
+        )
+        .groupBy("url")
+        .agg(F.min("ref_gid").alias("gid"))
+    )
+    rows = lambda df: {(x["url"], x["gid"]) for x in df.collect()}  # noqa: E731
+    assert rows(indexed) == rows(explode)
+    assert rows(indexed)  # the batch does match state
+
+    st.process_batch(spark, b2, state_dir, cfg, epoch_id=1).count()
+    # the index artifacts exist for committed epochs
+    assert (st._index_path(state_dir) / "epoch=0" / "_SUCCESS").exists()
+    assert st._bloom_file(state_dir, 1).exists()
+    st._bloom_file(state_dir, 0).unlink()
+    with pytest.raises(ValueError, match=r"covers committed epochs \[0\]"):
+        st.process_batch(spark, b2, state_dir, cfg, epoch_id=1)
 
 
 def test_zero_collision_batch_founds_only_new_groups(spark, tmp_path):

@@ -200,22 +200,22 @@ def rejoin_urls(pairs_did: DataFrame, ids: DataFrame) -> DataFrame:
 
 
 def minhash_candidates(
-    signatures: DataFrame, cfg: DedupConfig, did_pairs: bool = False
+    signatures: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
     """LSH band-bucket candidates from the `bands` column, prefiltered by
-    the MinHash similarity estimate.
+    the MinHash similarity estimate: (did_a, did_b, method) pairs in did
+    space, plus the skew frame.  Callers union sources in did space and
+    rejoin urls ONCE after the union dedup (``rejoin_urls``: two joins in
+    total instead of two per source).
 
     Boilerplate-heavy corpora make the LSH s-curve's low-J tail expensive:
     docs sharing only chrome (true J ~ 0.1) still band-collide a few
     percent of the time, and at web scale those false candidates dominate
     the pair list (measured 90% of 1.3M pairs below the no-match
-    threshold).  The signature table already holds the 126-perm MinHash, so
-    estimating J costs one narrow join + one zip_with per pair — far
-    cheaper than hauling text+shingles through the SBS join.  The cutoff
-    sits 2.7 sigma below the no-match threshold (sigma = sqrt(J(1-J)/126)
-    ~ 0.036 at J=0.2), and a pair only matters to the decision rule at
-    J >= jaccard_threshold (0.5), which cannot estimate below 0.12 — so
-    blocking recall at the decision boundary is unaffected.
+    threshold).  The self-join therefore carries the packed mini sketch on
+    each key row and drops a pair in the join stage unless its hamming
+    passes ``cfg.mini_max_hamming`` (calibration in DedupConfig) — far
+    cheaper than hauling text+shingles through the SBS join.
 
     The band-key table is re-derived from ``signatures`` by each of its up
     to 4 consumers (see _pairs_from_keys): library callers should persist
@@ -242,7 +242,7 @@ def minhash_candidates(
         )
         return joined.where(ham <= F.lit(cfg.mini_max_hamming))
 
-    raw_did, skew = _pairs_from_keys(
+    return _pairs_from_keys(
         keys,
         cfg,
         "minhash",
@@ -250,47 +250,14 @@ def minhash_candidates(
         pair_filter=mini_gate if use_mini else None,
         id_col="did",
     )
-    if cfg.minhash_prefilter > 0:
-        # optional post-hoc full-signature prefilter, computed in did space
-        # so both output modes stay consistent
-        if "minhash" not in signatures.columns:
-            raise ValueError(
-                "minhash_prefilter > 0 needs the full signature column: "
-                "build the table with compute_signatures(..., "
-                "keep_minhash=True) (the default drops it — no other "
-                "consumer reads it)"
-            )
-        from webdedup.features import minhash_similarity
-
-        sig = signatures.select(F.xxhash64("url").alias("did"), "minhash")
-        a = sig.select(F.col("did").alias("did_a"), F.col("minhash").alias("mh_a"))
-        b = sig.select(F.col("did").alias("did_b"), F.col("minhash").alias("mh_b"))
-        # merge hints: the signature side carries 1 KB arrays the static
-        # planner under-estimates (UDF-derived) — never let it become a
-        # broadcast build side (see substring.verify_overlaps for the
-        # measured failure mode)
-        raw_did = (
-            raw_did.join(a.hint("merge"), "did_a")
-            .join(b.hint("merge"), "did_b")
-            .where(
-                minhash_similarity(F.col("mh_a"), F.col("mh_b"), cfg.num_perm)
-                >= F.lit(cfg.minhash_prefilter)
-            )
-            .select("did_a", "did_b", "method")
-        )
-    if did_pairs:
-        # did-space output: the pipeline unions all sources in did space and
-        # rejoins urls ONCE after the union dedup (two joins total instead
-        # of two per source — join count is pure fixed overhead at small
-        # scale and extra exchanges at large)
-        return raw_did, skew
-    return rejoin_urls(raw_did, doc_ids(signatures)), skew
 
 
 def simhash_candidates(
-    signatures: DataFrame, cfg: DedupConfig, did_pairs: bool = False
+    signatures: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
-    """SimHash prefix-block candidates, hamming-filtered JVM-side.
+    """SimHash prefix-block candidates, hamming-filtered JVM-side, as
+    (did_a, did_b, method) pairs plus the skew frame (see
+    minhash_candidates).
 
     Pigeonhole: hamming distance <= simhash_max_hamming < simhash_blocks
     guarantees the pair shares at least one block value.
@@ -314,7 +281,7 @@ def simhash_candidates(
         ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         return joined.where(ham <= F.lit(cfg.simhash_max_hamming))
 
-    pairs_did, skew = _pairs_from_keys(
+    return _pairs_from_keys(
         keys,
         cfg,
         "simhash",
@@ -322,9 +289,6 @@ def simhash_candidates(
         pair_filter=hamming_gate,
         id_col="did",
     )
-    if did_pairs:
-        return pairs_did, skew
-    return rejoin_urls(pairs_did, doc_ids(signatures)), skew
 
 
 def _star_pairs(

@@ -1,5 +1,14 @@
-"""Stage checkpointing with manifests: snapshot tables + per-partition
-lineage + metrics, and skip-if-already-computed resume.
+"""Stage stores: where ``run_dedup`` keeps each stage's output.
+
+Both stores offer the same three calls, so the runner picks one once:
+``stage(name, compute, parents=, input_fingerprint=, partition_by=,
+metrics=, observe=)`` returns the stage's output, never with its
+``partition_by`` columns (computed or resumed: they shape the on-disk
+layout only); ``row_count(name)``; ``fingerprint(df, cols)``, the content
+identity a stage identity folds in.  ``MemoryStages`` persists in the
+caller's ``Scope``, counts rows with a ``count()`` and fingerprints
+nothing.  ``Checkpointer`` writes snapshot tables with manifests
+(per-partition lineage + metrics) and resumes what is already computed.
 
 The reference hands intermediate results between stages through Postgres
 tables (`df_source`, `es_scores`, `es_sbs`, `cluster_output`, ...,
@@ -17,9 +26,11 @@ The bookkeeping rides on the stage's own write; no Spark job runs after it.
 ``Observation`` on the frame the writer writes.  ``partition_counts`` are
 summed from the committed files' parquet footers, read with pyarrow, keyed
 by partition directory (``part=<k>``), or by file name when unpartitioned.
-The stage is read back with an explicit schema, so Spark infers none.  A
-resume is trusted when ``_SUCCESS`` exists and the footer row sum equals
-the manifest's ``row_count``; it reads with the manifest's schema.  A
+The stage is read back with an explicit schema, so Spark infers none, and
+the manifest's ``schema`` is the schema the stage returns.  A resume is
+trusted when ``_SUCCESS`` exists and the footer row sum equals the
+manifest's ``row_count``; it reads with the manifest's schema and selects
+its fields, since partition discovery appends the ``part=<k>`` column.  A
 missing or truncated file fails the check (``invalid_snapshot``) and the
 stage recomputes.
 
@@ -43,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from webdedup.config import DedupConfig
+from webdedup.scope import Scope
 
 MANIFEST_NAME = "manifest.json"
 
@@ -135,12 +147,14 @@ class Checkpointer:
         partition_by: list[str] | None = None,
         observe: list[Column] | None = None,
     ) -> DataFrame:
-        """Run (or resume) one stage; returns the snapshot-backed DataFrame.
+        """Run (or resume) one stage; returns the snapshot-backed DataFrame
+        without its ``partition_by`` columns.
 
         observe: extra aliased aggregate columns, collected by the stage's
         write next to ``row_count``.  metrics(observed) receives them all
         as one dict and returns the manifest's ``metrics``."""
         parents = parents or []
+        partition_by = partition_by or []
         identity = self._identity(name, parents, input_fingerprint)
         data_dir, manifest_path = self._paths(name)
 
@@ -168,14 +182,14 @@ class Checkpointer:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(str(data_dir))
-            # partition columns are left out of the read schema: Spark's
-            # partition discovery appends them with the types it infers
-            # from the directory names, exactly as an inferring read would
+            # partition columns are left out of the read schema (partition
+            # discovery appends them, and the drop below removes them)
             data_schema = StructType(
-                [f for f in df.schema if f.name not in (partition_by or [])]
+                [f for f in df.schema if f.name not in partition_by]
             )
             out = self.spark.read.schema(data_schema).parquet(str(data_dir))
             partition_counts = _footer_counts(data_dir)
+        out = out.drop(*partition_by)
         observed = obs.get
 
         manifest = {
@@ -203,15 +217,19 @@ class Checkpointer:
         so the seam checks the table's count alone."""
         rows = manifest.get("row_count")
         try:
+            schema = StructType.fromJson(manifest["schema"])
             if self._reader is not None:
                 snap = self._reader(name)
-                return snap if snap.count() == rows else None
-            if not (data_dir / "_SUCCESS").exists():
+                if snap.count() != rows:
+                    return None
+            elif not (data_dir / "_SUCCESS").exists():
                 return None
-            if sum(_footer_counts(data_dir).values()) != rows:
+            elif sum(_footer_counts(data_dir).values()) != rows:
                 return None
-            schema = StructType.fromJson(manifest["schema"])
-            return self.spark.read.schema(schema).parquet(str(data_dir))
+            else:
+                snap = self.spark.read.schema(schema).parquet(str(data_dir))
+            # partition discovery appends `part`: keep the stage's own fields
+            return snap.select(*schema.fieldNames())
         except Exception:
             # marker survived but the data didn't (truncated file -> footer
             # decode error; dropped table; unreadable manifest schema):
@@ -221,6 +239,36 @@ class Checkpointer:
     def manifest(self, stage: str) -> dict:
         _, manifest_path = self._paths(stage)
         return json.loads(manifest_path.read_text())
+
+    def row_count(self, stage: str) -> int:
+        return self.manifest(stage)["row_count"]
+
+    def fingerprint(self, df: DataFrame, key_cols: list[str]) -> str:
+        return input_fingerprint(df, key_cols)
+
+
+class MemoryStages:
+    """Each stage persisted in ``scope`` as returned, so the caller's
+    unpersist frees the real cache.  No manifest: identity, lineage,
+    metrics and observe are ignored."""
+
+    def __init__(self, scope: Scope):
+        self.scope = scope
+        self._frames: dict[str, DataFrame] = {}
+
+    def stage(self, name: str, compute: Callable[[], DataFrame], **kw) -> DataFrame:
+        """Checkpointer.stage's call; of its keywords only ``partition_by``
+        acts here: those columns are dropped before the persist."""
+        df = self.scope.persist(compute().drop(*kw.get("partition_by", [])))
+        self._frames[name] = df
+        return df
+
+    def row_count(self, stage: str) -> int:
+        # the first action on the stage: it also fills the persisted cache
+        return self._frames[stage].count()
+
+    def fingerprint(self, df: DataFrame, key_cols: list[str]) -> str:
+        return ""
 
 
 def input_fingerprint(df: DataFrame, key_cols: list[str]) -> str:

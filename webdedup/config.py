@@ -60,17 +60,6 @@ class DedupConfig:
 
     # ---- candidate generation ----
     max_bucket_size: int = 256  # LSH buckets larger than this are capped (logged, not silent)
-    # salting fan-out for wide-partial-state skewed aggregations (kept as a
-    # config surface; the pure-count bucket sizing no longer needs it — see
-    # candidates.bucket_stats)
-    salt_buckets: int = 16
-    # post-hoc full-signature prefilter join: OFF by default — the 64-perm
-    # in-join gate below subsumes it (same ~0.12 effective threshold) and
-    # costs no extra join.  >0 re-enables the old behavior: re-join the full
-    # 126-perm signatures and drop pairs whose estimated Jaccard is below
-    # the value (1 KB/pair of array traffic; kept as an option for configs
-    # with a small mini sketch).
-    minhash_prefilter: float = 0.0
     # in-join mini-sketch gate: the band self-join carries a byte-packed
     # mini_perms-permutation sketch (mini_perms/8 longs, signatures.
     # mini_sketch) per side and drops a pair in the join stage unless the

@@ -353,8 +353,7 @@ def compute_features(
     pairs: DataFrame,
     docs: DataFrame,
     cfg: DedupConfig,
-    ratios_for: str = "all",
-    n_pairs: int | None = None,
+    n_pairs: int,
     *,
     scope: Scope,
 ) -> DataFrame:
@@ -366,16 +365,14 @@ def compute_features(
     two SBS joins haul O(1) state per pair side, not O(doc_len)).  All
     nulls imputed to navalue_score=0.0 per the reference convention.
 
-    ratios_for: "all" computes the expensive ratio comparators (python UDF)
-    for every pair; "mixed" computes them only for pairs the cheap native
-    features place between the sure/no-match thresholds — the reference's
-    own pruning semantics (PruningPipe scores only mixed pairs with the
-    row-apply comparators, suricate/pipeline/pruningpipe.py:102-107).
+    The expensive ratio comparators (python UDF) run only for pairs the
+    cheap native features place between the sure/no-match thresholds — the
+    reference's own pruning semantics (PruningPipe scores only mixed pairs
+    with the row-apply comparators, suricate/pipeline/pruningpipe.py:102-107).
     Excluded pairs carry navalue_score 0.0 in the ratio columns.
 
-    n_pairs: pair count if the caller already knows it (stage manifest /
-    persisted count) — sizes the scoring repartition without an extra job.
-    None -> counted here (cheap when pairs is persisted/snapshot-backed).
+    n_pairs: the pair count (stage manifest / persisted count) — sizes the
+    scoring repartition without a job here.
 
     scope: holds the persisted doc side; close it once the feature table
     is materialized.
@@ -392,8 +389,6 @@ def compute_features(
     # + python-worker wakeup per partition for microseconds of work each
     # (part of the sf0.1 flagship regression, VERDICT r2 #2).
     sc = pairs.sparkSession.sparkContext
-    if n_pairs is None:
-        n_pairs = pairs.count()
     width = max(1, min(2 * sc.defaultParallelism, -(-n_pairs // 1024)))
     # partition by url_a ONLY: the first SBS join keys on url_a, so
     # EnsureRequirements consumes this exchange directly instead of
@@ -416,29 +411,27 @@ def compute_features(
     lev_a = F.substring(F.col("text_source"), 1, LEV_TEXT_CAP)
     lev_b = F.substring(F.col("text_target"), 1, LEV_TEXT_CAP)
     carry = [c for c in pairs.columns if c not in ("url_a", "url_b")]
-    if ratios_for == "mixed":
-        # Gate the UDF INPUTS on the cheap triage condition rather than
-        # splitting the plan: python UDFs inside when() are extracted and
-        # run unconditionally, but a NULL input short-circuits the python
-        # body to a skip, so non-mixed pairs cost one null per Arrow batch
-        # instead of an O(len^2/64) LCS.  Mirrors pruningpipe.py:95-107
-        # (sure/no pairs never see the apply comparators).
-        # same coalesced jaccard + predicates as triage_rule (shared helper
-        # prevents gate/decision drift: a null-shingle pair must look
-        # identical to both)
-        sj = F.coalesce(
-            jaccard_sketch(
-                F.col("shingles_source"),
-                F.col("shingles_target"),
-                cfg.shingle_sketch_k,
-            ),
-            F.lit(0.0),
-        )
-        methods = F.col("methods") if "methods" in pairs.columns else None
-        sure, nomatch = triage_predicates(sj, cfg, methods)
-        mixed = ~(sure | nomatch)
-        lev_a = F.when(mixed, lev_a)
-        lev_b = F.when(mixed, lev_b)
+    # Gate the UDF INPUTS on the cheap triage condition rather than
+    # splitting the plan: python UDFs inside when() are extracted and run
+    # unconditionally, but a NULL input short-circuits the python body to a
+    # skip, so non-mixed pairs cost one null per Arrow batch instead of an
+    # O(len^2/64) LCS.  Mirrors pruningpipe.py:95-107 (sure/no pairs never
+    # see the apply comparators).  Same coalesced jaccard + predicates as
+    # triage_rule (shared helper prevents gate/decision drift: a
+    # null-shingle pair must look identical to both)
+    sj = F.coalesce(
+        jaccard_sketch(
+            F.col("shingles_source"),
+            F.col("shingles_target"),
+            cfg.shingle_sketch_k,
+        ),
+        F.lit(0.0),
+    )
+    methods = F.col("methods") if "methods" in pairs.columns else None
+    sure, nomatch = triage_predicates(sj, cfg, methods)
+    mixed = ~(sure | nomatch)
+    lev_a = F.when(mixed, lev_a)
+    lev_b = F.when(mixed, lev_b)
     sbs = sbs.withColumn("_ratios", _both_ratios(lev_a, lev_b))
     feat = sbs.select(
         "url_a",

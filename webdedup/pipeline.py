@@ -1,6 +1,6 @@
 """End-to-end dedup pipeline — the PruningPipe equivalent.
 
-Stage DAG (each stage optionally a checkpointed snapshot table):
+Stage DAG (each stage one call into the run's stage store):
 
   pages ─ signatures ─┬─ minhash band candidates ──┐
         │             └─ simhash block candidates ─┤
@@ -11,6 +11,13 @@ Mirrors the reference's flagship `PruningPipe._pipe`
 (suricate/pipeline/pruningpipe.py:59-135): candidates == its pruned pair
 space, features == its score matrix, decide == triage + classifier +
 assembly, CC == its `SingleGrouping` transitive gid propagation.
+
+``run_dedup`` picks its stage store once: a ``Checkpointer`` (snapshot
+tables + manifests, resumable) when given a ``checkpoint_dir``, else
+``MemoryStages`` (each stage persisted in the run's own Scope).  Both
+offer ``stage``, ``row_count`` and ``fingerprint`` (webdedup.checkpoint),
+so the runner has one code path.  A stage's partition columns (``part``)
+shape the checkpointed layout only: neither store ever returns them.
 """
 
 from __future__ import annotations
@@ -21,7 +28,7 @@ from pyspark.sql import functions as F
 
 from webdedup import candidates as cand
 from webdedup import substring as sub
-from webdedup.checkpoint import Checkpointer, input_fingerprint
+from webdedup.checkpoint import Checkpointer, MemoryStages
 from webdedup.cluster import (
     assign_clusters,
     connected_components,
@@ -103,30 +110,20 @@ def run_dedup(
     if keeper not in ("golden", "best"):
         raise ValueError("keeper must be 'golden' or 'best'")
     cfg = cfg or DedupConfig()
-    ckpt = (
-        Checkpointer(spark, checkpoint_dir, cfg) if checkpoint_dir else None
-    )
-    fp = input_fingerprint(pages, ["url"]) if ckpt else ""
-
     stages = Scope()
-
-    def staged(name, fn, parents=None, extra="", **kw):
-        if ckpt:
-            return ckpt.stage(
-                name, fn, parents=parents or [], input_fingerprint=fp + extra, **kw
-            )
-        # no checkpoint dir: persist in memory/disk — each stage feeds several
-        # consumers (e.g. signatures -> minhash + simhash candidate sources)
-        return stages.persist(fn())
+    store = (
+        Checkpointer(spark, checkpoint_dir, cfg)
+        if checkpoint_dir
+        else MemoryStages(stages)
+    )
+    fp = store.fingerprint(pages, ["url"])
 
     # Checkpoint tables are hash-partitioned by url (Iceberg-shaped layout,
     # SURVEY §4.2): resume and downstream scans read a bounded, pruned file
-    # set instead of one flat directory; the `part` column is dropped after
-    # the stage so downstream schemas stay unchanged.
-    _PART_N = 16
-
+    # set instead of one flat directory.  The store never returns `part`,
+    # so downstream schemas stay unchanged.
     def _with_part(df: DataFrame, col: str) -> DataFrame:
-        return df.withColumn("part", F.pmod(F.xxhash64(col), F.lit(_PART_N)))
+        return df.withColumn("part", F.pmod(F.xxhash64(col), F.lit(16)))
 
     # four block scopes, each closed where its blocks die (all of them if
     # an exception unwinds): the in-memory stage outputs (handed to the
@@ -134,19 +131,12 @@ def run_dedup(
     # side, the CC star forest
     with stages, Scope() as keys, Scope() as doc_side, Scope() as cc:
         # -- 1. signatures ---------------------------------------------------
-        # the part column exists only on the checkpointed layout: in-memory
-        # stages persist the frame AS RETURNED, so the caller's unpersist on the
-        # dict entry releases the actual cache (a drop() AFTER persist would
-        # hand out a child plan whose unpersist misses the cached parent)
-        signatures = staged(
+        signatures = store.stage(
             "signatures",
-            (lambda: _with_part(compute_signatures(pages, cfg), "url"))
-            if ckpt
-            else (lambda: compute_signatures(pages, cfg)),
-            partition_by=["part"] if ckpt else None,
+            lambda: _with_part(compute_signatures(pages, cfg), "url"),
+            input_fingerprint=fp,
+            partition_by=["part"],
         )
-        if ckpt:
-            signatures = signatures.drop("part")
 
         # -- 2. candidates (four sources, provenance-tagged) -----------------
         skew_sources: list[DataFrame] = []
@@ -154,8 +144,8 @@ def run_dedup(
         def build_candidates() -> DataFrame:
             # all sources in did space; urls rejoin ONCE after the union dedup
             # (two joins total, vs two per source — see candidates.rejoin_urls)
-            mh_pairs, mh_skew = cand.minhash_candidates(signatures, cfg, did_pairs=True)
-            sh_pairs, sh_skew = cand.simhash_candidates(signatures, cfg, did_pairs=True)
+            mh_pairs, mh_skew = cand.minhash_candidates(signatures, cfg)
+            sh_pairs, sh_skew = cand.simhash_candidates(signatures, cfg)
             ex_pairs = cand.exact_candidates(pages, did_pairs=True)
             skew_sources[:] = [mh_skew, sh_skew]
             sources = [mh_pairs, sh_pairs, ex_pairs]
@@ -172,8 +162,9 @@ def run_dedup(
                         "method", F.lit("substring")
                     )
                 )
-            return cand.rejoin_urls(
-                cand.union_candidates(*sources), cand.doc_ids(pages)
+            return _with_part(
+                cand.rejoin_urls(cand.union_candidates(*sources), cand.doc_ids(pages)),
+                "url_a",
             )
 
         def candidate_metrics(_observed: dict) -> dict:
@@ -192,24 +183,18 @@ def run_dedup(
             union = reduce(lambda a, b: a.unionByName(b), skew_sources)
             return {"skew_drops": [r.asDict() for r in union.collect()]}
 
-        pairs = staged(
+        pairs = store.stage(
             "candidates",
-            (lambda: _with_part(build_candidates(), "url_a"))
-            if ckpt
-            else build_candidates,
+            build_candidates,
             parents=["signatures"],
-            partition_by=["part"] if ckpt else None,
-            metrics=candidate_metrics if ckpt else None,
+            input_fingerprint=fp,
+            partition_by=["part"],
+            metrics=candidate_metrics,
         )
-        if ckpt:
-            pairs = pairs.drop("part")
-
-        # pair count: free from the stage manifest when checkpointed, else one
-        # count that also MATERIALIZES the persisted pair list — after which the
-        # key-table caches inside the candidate sources are dead weight
-        n_pairs = (
-            ckpt.manifest("candidates")["row_count"] if ckpt else pairs.count()
-        )
+        # free from the checkpointed manifest; in memory, the count that also
+        # MATERIALIZES the persisted pair list — after which the key-table
+        # caches inside the candidate sources are dead weight
+        n_pairs = store.row_count("candidates")
         keys.close()
 
         # -- 3. features -----------------------------------------------------
@@ -219,19 +204,12 @@ def run_dedup(
         # expensive ratio comparators only for triage-mixed pairs — the
         # reference's pruning semantics (PruningPipe scores only mixed pairs
         # with the apply comparators, pruningpipe.py:102-107)
-        features = staged(
+        features = store.stage(
             "features",
-            lambda: compute_features(
-                pairs, docs, cfg, ratios_for="mixed", n_pairs=n_pairs, scope=doc_side
-            ),
+            lambda: compute_features(pairs, docs, cfg, n_pairs, scope=doc_side),
             parents=["candidates"],
+            input_fingerprint=fp,
         )
-        if ckpt:
-            # the stage parquet write above already materialized the feature
-            # table — the doc-side cache compute_features persisted is dead
-            # weight now.  The non-ckpt path releases after the clusters
-            # action instead (the features persist fills transitively there).
-            doc_side.close()
 
         # -- 4. decision: rule triage, or the learned question-loop path -----
         # per-method positive-pair attribution -> the decisions manifest (the
@@ -264,9 +242,7 @@ def run_dedup(
             # a rule-decisions checkpoint must never resume as ml output, and a
             # re-run with different truth labels (same pages, same dir) must not
             # resume decisions trained on the old labels
-            truth_fp = (
-                input_fingerprint(truth_pairs, ["url_a", "url_b"]) if ckpt else ""
-            )
+            truth_fp = store.fingerprint(truth_pairs, ["url_a", "url_b"])
             extra = f":decision=ml:q={n_questions}:cv={cross_validate}:truth={truth_fp}"
 
             def decide() -> DataFrame:
@@ -283,11 +259,11 @@ def run_dedup(
             def decide() -> DataFrame:
                 return triage_rule(features, cfg)
 
-        decided = staged(
+        decided = store.stage(
             "decisions",
             decide,
             parents=["features"],
-            extra=extra,
+            input_fingerprint=fp + extra,
             metrics=decision_metrics,
             observe=positives,
         )
@@ -300,20 +276,14 @@ def run_dedup(
                 pages.select("url", "warc_ts", "text", "lang"), comp
             ).select("url", "gid")
 
-        clusters = staged("clusters", build_clusters, parents=["decisions"])
-        if not ckpt:
-            # one count materializes the persisted stage, after which the
-            # star-forest blocks connected_components retained are dead — the
-            # released lineage is unrecoverable, so the materialization must
-            # come FIRST (the stage persist is disk-backed; local-mode block
-            # loss means process death, the same failure class localCheckpoint
-            # already has).  The same count transitively fills the
-            # features/decisions persists, so the doc-side cache inside
-            # compute_features is releasable here too (the ckpt path released
-            # it at the features stage write; build_clusters ALWAYS runs on
-            # this path, so the count is never an extra action).
-            clusters.count()
-            doc_side.close()
+        clusters = store.stage(
+            "clusters", build_clusters, parents=["decisions"], input_fingerprint=fp
+        )
+        # in memory this count materializes the persisted stages; checkpointed,
+        # the writes already did.  Only then may the doc side and the star
+        # forest go: a freed localCheckpoint cannot be recomputed
+        store.row_count("clusters")
+        doc_side.close()
         cc.close()
 
         out: dict[str, DataFrame] = {
@@ -333,7 +303,7 @@ def run_dedup(
                     if keeper_score is not None
                     else default_keeper_score("text")
                 )
-                out["keepers"] = staged(
+                out["keepers"] = store.stage(
                     "keepers",
                     lambda: keep_best(
                         clustered.withColumn("keeper_score", score).select(
@@ -344,22 +314,23 @@ def run_dedup(
                     parents=["clusters"],
                     # the score EXPRESSION is part of the stage identity: a
                     # resume with a different quality score must recompute
-                    extra=f":keeper_score={_column_identity(clustered, score)}",
+                    input_fingerprint=f"{fp}:keeper_score="
+                    f"{_column_identity(clustered, score)}",
                 )
             else:
-                out["golden"] = staged(
+                out["golden"] = store.stage(
                     "golden",
                     lambda: golden_records(
                         clustered,
                         policies={"url": "first", "text": "first", "lang": "popularity"},
                     ),
                     parents=["clusters"],
+                    input_fingerprint=fp,
                 )
 
-        if not ckpt:
-            for df in out.values():
-                stages.detach(df)
+        # the in-memory stage outputs are the caller's now
+        stages.detach_all()
 
-    if ckpt:
-        out["_checkpointer"] = ckpt  # type: ignore[assignment]
+    if checkpoint_dir:
+        out["_checkpointer"] = store  # type: ignore[assignment]
     return out

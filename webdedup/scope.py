@@ -102,6 +102,10 @@ class Scope:
         self._take(df)
         return df
 
+    def detach_all(self) -> None:
+        """Hand every held frame to the caller: close() frees nothing."""
+        self._held.clear()
+
     def close(self) -> None:
         while self._held:
             df, free = self._held.pop()

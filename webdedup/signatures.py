@@ -107,7 +107,7 @@ def _mix64_inplace(v: np.ndarray, tmp: np.ndarray) -> None:
 # a worker the shared memory bus caps aggregate throughput (measured
 # 32-process scaling 0.47).  At 1<<11 the scratch is 2 MB (L2/L3-resident
 # per worker) and 32-process scaling improves to 0.60 with ~3% solo cost
-# (BENCH/microbench_minhash.py).
+# (measured with BENCH/microbench_minhash.py from commit 4c8bc7b).
 _CHUNK_SHINGLES = 1 << 11
 
 
@@ -358,7 +358,7 @@ def simhash_blocks(simhash_col: Column, cfg: DedupConfig) -> Column:
 
 
 def compute_signatures(
-    pages: DataFrame, cfg: DedupConfig, keep_minhash: bool | None = None
+    pages: DataFrame, cfg: DedupConfig, keep_minhash: bool = False
 ) -> DataFrame:
     """pages(url, text, ...) -> (url, n_tokens, shingles, [minhash,] simhash,
     bands, blocks, mini) — shingles = the bottom-k sketch.
@@ -384,15 +384,11 @@ def compute_signatures(
     is exact below k and the unbiased bottom-k estimator above — the full
     array would cost O(doc_len) per PAIR side in the verification join.
 
-    keep_minhash: include the full num_perm signature column.  Default
-    (None) keeps it only when cfg.minhash_prefilter > 0 — the one consumer
-    (candidates.minhash_candidates' optional post-hoc prefilter join).
-    Everything else reads the derived columns (bands/blocks/mini/sketch),
-    so by default the table drops ~num_perm*8 B/doc of checkpoint write +
+    keep_minhash: include the full num_perm signature column.  The engine
+    reads only the derived columns (bands/blocks/mini/sketch), so by
+    default the table drops ~num_perm*8 B/doc of checkpoint write +
     downstream scan.
     """
-    if keep_minhash is None:
-        keep_minhash = cfg.minhash_prefilter > 0
     sig_udf = make_signature_udf(cfg)
     toks_df = pages.select("url", tokens(F.col("text")).alias("toks"))
     df = toks_df.select(

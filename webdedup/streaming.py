@@ -23,10 +23,11 @@ pmod(xxhash64(key), 16), plus a per-epoch Bloom bitmap over the keys
 (webdedup.bloom).  A batch probes the OR of the epoch blooms map-side; only
 band keys that MIGHT collide survive, their partitions are the only index
 partitions read (directory-level partition pruning), and a batch with zero
-surviving keys never touches state at all.  Epochs committed by older
-layouts (no index) fall back to the explode path for correctness; at real
-scale the per-epoch index dirs would be compacted periodically like any
-log-structured table.
+surviving keys never touches state at all.  compact_index folds older
+epochs' index dirs into one merged artifact, as any log-structured table
+is compacted.  Committed state that no index covers (an epoch's index dir
+or bloom file missing) makes process_batch raise ValueError naming the
+state dir and the epochs; it never falls back to exploding all state.
 """
 
 from __future__ import annotations
@@ -201,8 +202,7 @@ def _index_coverage(
     state_dir: str, epochs: list[int]
 ) -> tuple[int | None, list[int]] | None:
     """(merged high-water or None, per-epoch tail) covering exactly
-    ``epochs`` with index artifacts, or None when coverage is impossible
-    and the caller must fall back to the legacy explode path:
+    ``epochs`` with index artifacts, or None when coverage is impossible:
 
       - some tail epoch lacks its dir/bloom (mixed/legacy layout), or
       - the merged artifact OVERREACHES (high > max(epochs)): it folds in
@@ -344,9 +344,10 @@ def _match_against_index(
     coverage: tuple[int | None, list[int]],
     cfg: DedupConfig,
 ) -> DataFrame:
-    """Index-probe variant of _match_against (identical output contract):
-    a ref gid matches a batch url iff some ref member shares a band key AND
-    passes the exact-Jaccard verify — exploding only the BATCH, never the
+    """(url, gid) for batch urls that match a reference group: a ref gid
+    matches a batch url iff some ref member shares a band key AND passes
+    the exact-Jaccard verify (min matched gid: a deterministic stand-in for
+    the reference's majority vote) — exploding only the BATCH, never the
     state.  Bloom-negative batch keys (definitively collision-free) drop
     map-side; the band-key index is read only for the partitions the
     survivors hash into; ref shingles are fetched for candidate ref urls
@@ -403,36 +404,6 @@ def _match_against_index(
             >= cfg.jaccard_threshold
         )
     )
-    return verified.groupBy("url").agg(F.min("ref_gid").alias("gid"))
-
-
-def _match_against(
-    batch_sigs: DataFrame, ref_sigs: DataFrame, cfg: DedupConfig
-) -> DataFrame:
-    """Candidate matches batch->reference via LSH band join, verified by
-    exact shingle Jaccard: (url, gid) for batch urls that match a reference
-    group."""
-    b = batch_sigs.select(
-        "url", "shingles", F.posexplode("bands").alias("key_idx", "key_hash")
-    )
-    r = ref_sigs.select(
-        F.col("url").alias("ref_url"),
-        F.col("gid").alias("ref_gid"),
-        F.col("shingles").alias("ref_shingles"),
-        F.posexplode("bands").alias("key_idx", "key_hash"),
-    )
-    cand = (
-        b.join(r, ["key_idx", "key_hash"])
-        .select("url", "shingles", "ref_gid", "ref_shingles")
-        .distinct()
-    )
-    verified = cand.where(
-        jaccard_sketch(
-            F.col("shingles"), F.col("ref_shingles"), cfg.shingle_sketch_k
-        )
-        >= cfg.jaccard_threshold
-    )
-    # deterministic stand-in for the reference's majority vote: min gid
     return verified.groupBy("url").agg(F.min("ref_gid").alias("gid"))
 
 
@@ -494,17 +465,17 @@ def process_batch(
     from webdedup.candidates import minhash_candidates
     from webdedup.cluster import connected_components
 
+    committed = _committed_epochs(state_dir)
     if epoch_id is None:
-        committed = _committed_epochs(state_dir)
         epoch_id = (committed[-1] + 1) if committed else 0
+    committed_below = [e for e in committed if e < epoch_id]
     with Scope() as held, Scope() as cc:
         sigs = held.persist(compute_signatures(batch, cfg))
-        state = read_state(spark, state_dir, before_epoch=epoch_id)
 
         # 1. batch-internal grouping (new records may duplicate each other),
         #    verified in did space: one join per side fetches url AND
         #    shingles (collision posture: candidates.doc_ids)
-        internal_pairs, _ = minhash_candidates(sigs, cfg, did_pairs=True)
+        internal_pairs, _ = minhash_candidates(sigs, cfg)
         docs = sigs.select(F.xxhash64("url"), "url", "shingles")
         verified = (
             internal_pairs.join(docs.toDF("did_a", "url_a", "sh_a"), "did_a")
@@ -517,17 +488,18 @@ def process_batch(
         )
         internal = connected_components(verified, scope=cc)
 
-        # 2. match against accumulated reference state — via the band-key
+        # 2. match against accumulated reference state via the band-key
         #    index (explodes only the batch; bloom + partition pruning on
-        #    state) when every committed epoch has one, else the legacy
-        #    state explode
-        if state is not None:
-            committed_below = [e for e in _committed_epochs(state_dir) if e < epoch_id]
+        #    state); committed state that no index covers is an error
+        if committed_below:
             coverage = _index_coverage(state_dir, committed_below)
-            if coverage is not None:
-                matched = _match_against_index(spark, sigs, state_dir, coverage, cfg)
-            else:
-                matched = _match_against(sigs, state, cfg)
+            if coverage is None:
+                raise ValueError(
+                    f"{state_dir}: no band-key index covers committed epochs "
+                    f"{committed_below} (an epoch's index dir or bloom file is "
+                    "missing, or a merged index reaches past them)"
+                )
+            matched = _match_against_index(spark, sigs, state_dir, coverage, cfg)
         else:
             matched = spark.createDataFrame([], "url string, gid string")
 
