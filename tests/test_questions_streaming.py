@@ -370,10 +370,10 @@ def test_windowed_stream_watermark(spark, tmp_path):
 
 
 def test_band_key_index_matches_legacy_explode(spark, tmp_path):
-    """The band-key-index probe (bloom prune + partition-pruned index read)
-    must match exactly what a full-state explode join matches — the index
-    is a pure access-path change; the explode join is the oracle.  State
-    that no index covers (an epoch's bloom file deleted) raises."""
+    """The band-key-index match must match exactly what a full-state
+    explode join matches — the index is a pure access-path change; the
+    explode join is the oracle.  State that no index covers (an epoch's
+    index commit marker deleted) raises."""
     from webdedup import streaming as st
     from webdedup.features import jaccard_sketch
     from webdedup.signatures import compute_signatures
@@ -415,15 +415,17 @@ def test_band_key_index_matches_legacy_explode(spark, tmp_path):
     st.process_batch(spark, b2, state_dir, cfg, epoch_id=1).count()
     # the index artifacts exist for committed epochs
     assert (st._index_path(state_dir) / "epoch=0" / "_SUCCESS").exists()
-    assert st._bloom_file(state_dir, 1).exists()
-    st._bloom_file(state_dir, 0).unlink()
+    assert (st._index_path(state_dir) / "epoch=1" / "_SUCCESS").exists()
+    (st._index_path(state_dir) / "epoch=0" / "_SUCCESS").unlink()
     with pytest.raises(ValueError, match=r"covers committed epochs \[0\]"):
         st.process_batch(spark, b2, state_dir, cfg, epoch_id=1)
 
 
-def test_zero_collision_batch_founds_only_new_groups(spark, tmp_path):
-    """A batch sharing no band key with state must take the bloom shortcut
-    (no index partitions read) and found only new groups (gid == url)."""
+def test_zero_collision_batch_founds_only_new_groups(spark, tmp_path, jobs_submitted):
+    """A batch sharing no band key with state goes through the band-key
+    index match once, finds no candidate, and founds only new groups
+    (gid == url).  Jobs: 26 with the Bloom prefilter and its partition
+    collect, 23 without."""
     from webdedup import streaming as st
     from webdedup.synth import generate_pages, pages_to_spark
 
@@ -459,12 +461,18 @@ def test_zero_collision_batch_founds_only_new_groups(spark, tmp_path):
 
     st._match_against_index = counting
     try:
-        assigned = process_batch(
-            spark, pages_to_spark(spark, other), state_dir, cfg, epoch_id=1
-        ).collect()
+        batch, n = jobs_submitted(
+            "pin-zero-collision-batch",
+            lambda: process_batch(
+                spark, pages_to_spark(spark, other), state_dir, cfg, epoch_id=1
+            ),
+        )
     finally:
         st._match_against_index = real_reader
+    assigned = batch.collect()
+    st.release_batch(batch)
     assert calls["reads"] == 1  # index path taken
+    assert n <= 23, n
     assert all(r["gid"] == r["url"] for r in assigned)
 
 
@@ -474,12 +482,7 @@ def test_compact_index_preserves_assignments_and_replay(spark, tmp_path):
     the last committed one so a replay of the newest epoch stays
     idempotent (a replayed epoch must never find its own rows pre-merged
     into its reference index)."""
-    from webdedup.streaming import (
-        _bloom_file,
-        _index_path,
-        compact_index,
-        process_batch,
-    )
+    from webdedup.streaming import _index_path, compact_index, process_batch
     from webdedup.synth import generate_pages, pages_to_spark
 
     cfg = DedupConfig()
@@ -524,7 +527,7 @@ def test_compact_index_preserves_assignments_and_replay(spark, tmp_path):
         for r in process_batch(spark, batches[3], compacted_dir, cfg, epoch_id=3).collect()
     }
     assert replay == first
-    assert _bloom_file(compacted_dir, 3).exists()
+    assert (root / "epoch=3" / "_SUCCESS").exists()
 
 
 def test_stream_driver_auto_compacts(spark, tmp_path):
@@ -579,12 +582,7 @@ def test_compact_index_sweeps_crash_orphans(spark, tmp_path):
     'already compact') must sweep them."""
     import shutil
 
-    from webdedup.streaming import (
-        _bloom_file,
-        _index_path,
-        compact_index,
-        process_batch,
-    )
+    from webdedup.streaming import _index_path, compact_index, process_batch
     from webdedup.synth import generate_pages, pages_to_spark
 
     cfg = DedupConfig()
@@ -596,14 +594,12 @@ def test_compact_index_sweeps_crash_orphans(spark, tmp_path):
         process_batch(spark, b, state_dir, cfg, epoch_id=e).count()
     assert compact_index(spark, state_dir) == 1
     root = _index_path(state_dir)
-    # simulate the crash leftovers: a covered epoch dir + bloom reappear
+    # simulate the crash leftovers: a covered epoch dir reappears
     (root / "epoch=0").mkdir()
     (root / "epoch=0" / "_SUCCESS").touch()
-    _bloom_file(state_dir, 0).write_bytes(b"\0" * 8)
     # nothing new to merge -> early 'already compact' path must still sweep
     assert compact_index(spark, state_dir) == 1
     assert not (root / "epoch=0").exists()
-    assert not _bloom_file(state_dir, 0).exists()
     shutil.rmtree(state_dir)
 
 

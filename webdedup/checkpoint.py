@@ -45,7 +45,7 @@ from __future__ import annotations
 import hashlib
 import json
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -69,18 +69,25 @@ def _partition_counts(df: DataFrame) -> dict[str, int]:
     return {str(r["__pid"]): int(r["count"]) for r in rows}
 
 
+def data_files(directory: Path, pattern: str) -> Iterator[Path]:
+    """The files under ``directory`` matching ``pattern`` that Spark's
+    listing reads: it skips every path with a component starting with
+    ``_`` or ``.`` (``_SUCCESS``, ``.crc`` files, ``_temporary/`` dirs)."""
+    for f in directory.rglob(pattern):
+        if f.is_file() and not any(
+            p.startswith(("_", ".")) for p in f.relative_to(directory).parts
+        ):
+            yield f
+
+
 def _footer_counts(data_dir: Path) -> dict[str, int]:
     """Rows per partition directory (``part=<k>``), or per file for an
     unpartitioned stage, read from the data files' parquet footers with
-    pyarrow (no Spark job).  Hidden and underscore paths (``_SUCCESS``,
-    ``.crc``, ``_temporary``) are skipped, as Spark's own listing skips
-    them.  Raises on a file whose footer does not decode (a truncated
-    write)."""
+    pyarrow (no Spark job).  Raises on a file whose footer does not decode
+    (a truncated write)."""
     counts: dict[str, int] = {}
-    for path in sorted(data_dir.rglob("*.parquet")):
+    for path in sorted(data_files(data_dir, "*.parquet")):
         rel = path.relative_to(data_dir)
-        if any(p.startswith(("_", ".")) for p in rel.parts):
-            continue
         key = rel.parent.as_posix() if len(rel.parts) > 1 else rel.name
         counts[key] = counts.get(key, 0) + pq.read_metadata(path).num_rows
     return counts

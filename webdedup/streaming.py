@@ -18,16 +18,18 @@ Matching cost: naively, every batch re-explodes ALL accumulated state into
 band keys — O(|state| * bands) work per batch, the term that dominates once
 state outgrows the batches (the 10^12-doc regime).  process_batch therefore
 maintains a per-epoch BAND-KEY INDEX next to the state: the epoch's
-(key_idx, key_hash) -> (ref_url, ref_gid) rows, hash-partitioned by
-pmod(xxhash64(key), 16), plus a per-epoch Bloom bitmap over the keys
-(webdedup.bloom).  A batch probes the OR of the epoch blooms map-side; only
-band keys that MIGHT collide survive, their partitions are the only index
-partitions read (directory-level partition pruning), and a batch with zero
-surviving keys never touches state at all.  compact_index folds older
-epochs' index dirs into one merged artifact, as any log-structured table
-is compacted.  Committed state that no index covers (an epoch's index dir
-or bloom file missing) makes process_batch raise ValueError naming the
-state dir and the epochs; it never falls back to exploding all state.
+(key_idx, key_hash) -> (ref_url, ref_gid) rows, written under
+part=pmod(xxhash64(key), 16) directories.  A batch explodes only its own
+band keys and joins them with the index; state is read only for the
+shingles of the candidate ref urls, which the exact-Jaccard verify needs.
+No prefilter sits in front of the join: a per-epoch 2^20-bit Bloom filter
+over 42 band keys per doc passes 57% of non-member keys at 10k docs of
+state and 99% at 25k, so it stops pruning once state outgrows toy sizes.
+compact_index folds older epochs' index dirs into one merged artifact, as
+any log-structured table is compacted.  Committed state that no index
+covers (an epoch's index dir missing) makes process_batch raise ValueError
+naming the state dir and the epochs; it never falls back to exploding all
+state.
 """
 
 from __future__ import annotations
@@ -35,19 +37,18 @@ from __future__ import annotations
 from functools import reduce
 from pathlib import Path
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from webdedup.checkpoint import data_files
 from webdedup.config import DedupConfig
 from webdedup.features import jaccard_sketch
 from webdedup.scope import Scope, free_checkpoint
 from webdedup.signatures import compute_signatures
 
-# band-key index geometry (performance-only: false positives cost a wasted
-# partition read, never a wrong answer; sizes are per-epoch)
-_BLOOM_M = 1 << 20
-_BLOOM_K = 6
+# the band-key index's on-disk layout, part=<pmod(k64, 16)> directories:
+# with the k64 column it is the format _INDEX_COLS pins for index dirs
+# written earlier, though no read prunes on either any more
 _INDEX_PARTS = 16
 
 # the file columns process_batch writes (state) and _write_epoch_index
@@ -63,10 +64,6 @@ def _state_path(state_dir: str) -> Path:
 
 def _index_path(state_dir: str) -> Path:
     return Path(state_dir) / "bandkeys"
-
-
-def _bloom_file(state_dir: str, epoch: int) -> Path:
-    return Path(state_dir) / "bloom" / f"epoch_{epoch}.bits"
 
 
 def _committed_epochs(state_dir: str) -> list[int]:
@@ -103,16 +100,7 @@ def _check_footer(directory: Path, columns: str) -> None:
             return f"array<{spark_type(t.value_type)}>"
         return {"int64": "bigint", "int32": "int"}.get(str(t), str(t))
 
-    # any file Spark would read: it skips every path with a component
-    # starting with "_" or "." (_SUCCESS, .crc files, _temporary/ dirs)
-    data = next(
-        (
-            f for f in directory.rglob("*")
-            if f.is_file()
-            and not any(p[0] in "_." for p in f.relative_to(directory).parts)
-        ),
-        None,
-    )
+    data = next(data_files(directory, "*"), None)
     if data is None:
         return
     expected = dict(c.split(" ", 1) for c in columns.split(", "))
@@ -148,54 +136,33 @@ def read_state(
     return spark.read.schema(_STATE_COLS).parquet(*map(str, dirs))
 
 
-def _exploded_keys(sigs: DataFrame, extra: list[str]) -> DataFrame:
-    """(extra..., key_idx, key_hash, k64) band-key rows for signature rows."""
-    return sigs.select(
-        *extra, F.posexplode("bands").alias("key_idx", "key_hash")
-    ).withColumn("k64", F.xxhash64("key_idx", "key_hash"))
-
-
 def _write_epoch_index(new_state: DataFrame, state_dir: str, epoch_id: int) -> None:
-    """Write the epoch's band-key index + bloom bitmap (both idempotent
-    overwrites; written BEFORE the state parquet whose _SUCCESS is the
-    epoch's commit marker, so a crash in between leaves an invisible,
-    harmless index dir)."""
-    from webdedup.bloom import build_bloom
-
-    with Scope() as scope:
-        keys = scope.persist(
-            _exploded_keys(
-                new_state.select(
-                    F.col("url").alias("ref_url"),
-                    F.col("gid").alias("ref_gid"),
-                    "bands",
-                ),
-                ["ref_url", "ref_gid"],
-            ).withColumn("part", F.pmod("k64", F.lit(_INDEX_PARTS)).cast("int"))
+    """Write the epoch's band-key index (an idempotent overwrite, written
+    BEFORE the state parquet whose _SUCCESS is the epoch's commit marker,
+    so a crash in between leaves an invisible, harmless index dir)."""
+    keys = (
+        new_state.select(
+            F.col("url").alias("ref_url"),
+            F.col("gid").alias("ref_gid"),
+            F.posexplode("bands").alias("key_idx", "key_hash"),
         )
-        keys.write.mode("overwrite").partitionBy("part").parquet(
-            str(_index_path(state_dir) / f"epoch={epoch_id}")
-        )
-        bloom = build_bloom(keys, "k64", m_bits=_BLOOM_M, k=_BLOOM_K)
-    bf = _bloom_file(state_dir, epoch_id)
-    bf.parent.mkdir(parents=True, exist_ok=True)
-    bf.write_bytes(bloom.bits.tobytes())
+        .withColumn("k64", F.xxhash64("key_idx", "key_hash"))
+        .withColumn("part", F.pmod("k64", F.lit(_INDEX_PARTS)).cast("int"))
+    )
+    keys.write.mode("overwrite").partitionBy("part").parquet(
+        str(_index_path(state_dir) / f"epoch={epoch_id}")
+    )
 
 
 def _merged_high_water(state_dir: str) -> int | None:
-    """Highest H for which a compacted index (bandkeys/merged=<H>, bloom
-    merged_<H>.bits) exists, or None."""
+    """Highest H for which a compacted index (bandkeys/merged=<H>) has
+    landed (its _SUCCESS marker exists), or None."""
     highs = [
         int(d.name.split("=", 1)[1])
         for d in _index_path(state_dir).glob("merged=*")
         if (d / "_SUCCESS").exists()
-        and _bloom_file_merged(state_dir, int(d.name.split("=", 1)[1])).exists()
     ]
     return max(highs) if highs else None
-
-
-def _bloom_file_merged(state_dir: str, high: int) -> Path:
-    return Path(state_dir) / "bloom" / f"merged_{high}.bits"
 
 
 def _index_coverage(
@@ -204,7 +171,7 @@ def _index_coverage(
     """(merged high-water or None, per-epoch tail) covering exactly
     ``epochs`` with index artifacts, or None when coverage is impossible:
 
-      - some tail epoch lacks its dir/bloom (mixed/legacy layout), or
+      - some tail epoch lacks its index dir (mixed/legacy layout), or
       - the merged artifact OVERREACHES (high > max(epochs)): it folds in
         epochs the caller must not see — e.g. a replayed epoch matching
         against a merge that already contains that epoch's own rows would
@@ -219,8 +186,6 @@ def _index_coverage(
     tail = [e for e in epochs if high is None or e > high]
     for e in tail:
         if not (_index_path(state_dir) / f"epoch={e}" / "_SUCCESS").exists():
-            return None
-        if not _bloom_file(state_dir, e).exists():
             return None
     return (high, tail)
 
@@ -238,7 +203,7 @@ def _read_index(
     """The band-key index rows covered by (high, tail) — one read per source
     root (a single multi-root read would try to reconcile the merged=/epoch=
     directory names as conflicting partition columns), unioned by name.
-    Callers' column prunes / part filters push down through the Union.
+    Callers' column prunes push down through the Union.
     Reads pin the writer's schema, checked against one footer per root."""
     roots = _index_source_roots(state_dir, high, tail)
     for s in roots:
@@ -256,7 +221,7 @@ def _read_index(
 
 def _sweep_covered(state_dir: str, high: int) -> None:
     """Delete index artifacts the merged=<high> artifact supersedes: every
-    per-epoch dir/bloom with epoch <= high and every older merged artifact.
+    per-epoch dir with epoch <= high and every older merged artifact.
     Nothing reads them (_index_coverage tails are strictly > high), but a
     crash between a merged write and this cleanup would otherwise leak them
     forever — the early 'already compact' return must retry the sweep."""
@@ -267,18 +232,15 @@ def _sweep_covered(state_dir: str, high: int) -> None:
         e = int(d.name.split("=", 1)[1])
         if e <= high:
             shutil.rmtree(d, ignore_errors=True)
-            _bloom_file(state_dir, e).unlink(missing_ok=True)
     for d in root.glob("merged=*"):
-        h = int(d.name.split("=", 1)[1])
-        if h < high:
+        if int(d.name.split("=", 1)[1]) < high:
             shutil.rmtree(d, ignore_errors=True)
-            _bloom_file_merged(state_dir, h).unlink(missing_ok=True)
 
 
 def compact_index(
     spark: SparkSession, state_dir: str, min_tail: int = 0
 ) -> int | None:
-    """Merge committed epochs' band-key indexes + blooms into one compacted
+    """Merge committed epochs' band-key indexes into one compacted
     artifact, then drop the per-epoch dirs it covers — the log-structured-
     table maintenance step that keeps per-batch index reads O(1)
     directories instead of O(#epochs).
@@ -289,10 +251,10 @@ def compact_index(
     its own rows pre-merged into the reference index.  STATE epochs are
     untouched (they are the durable record); only the derived index is
     rewritten, so compaction is safe between batches and crash-safe — the
-    merged artifact lands before any per-epoch dir is removed, and a
-    half-finished removal only leaves duplicate index rows, which reads
-    dedup.  Returns the new high-water epoch, or None when there is nothing
-    to compact.
+    merged artifact lands (its _SUCCESS marker) before any per-epoch dir
+    is removed, and a half-finished removal only leaves duplicate index
+    rows, which reads dedup.  Returns the new high-water epoch, or None
+    when there is nothing to compact.
 
     min_tail: skip (returning the current high-water) unless at least this
     many per-epoch dirs sit above it — the auto-compaction trigger
@@ -313,25 +275,14 @@ def compact_index(
         if old_high is not None:
             _sweep_covered(state_dir, old_high)
         return old_high
-    root = _index_path(state_dir)
     merged = (
         _read_index(spark, state_dir, old_high, tail)
         .select("ref_url", "ref_gid", "key_idx", "key_hash", "k64", "part")
         .distinct()
     )
     merged.write.mode("overwrite").partitionBy("part").parquet(
-        str(root / f"merged={high}")
+        str(_index_path(state_dir) / f"merged={high}")
     )
-    bits = np.zeros(_BLOOM_M >> 6, dtype=np.uint64)
-    if old_high is not None:
-        bits |= np.frombuffer(
-            _bloom_file_merged(state_dir, old_high).read_bytes(), dtype=np.uint64
-        )
-    for e in tail:
-        bits |= np.frombuffer(_bloom_file(state_dir, e).read_bytes(), dtype=np.uint64)
-    bf = _bloom_file_merged(state_dir, high)
-    bf.parent.mkdir(parents=True, exist_ok=True)
-    bf.write_bytes(bits.tobytes())
     # drop what the merged artifact covers (merged landed first = crash-safe)
     _sweep_covered(state_dir, high)
     return high
@@ -348,44 +299,17 @@ def _match_against_index(
     matches a batch url iff some ref member shares a band key AND passes
     the exact-Jaccard verify (min matched gid: a deterministic stand-in for
     the reference's majority vote) — exploding only the BATCH, never the
-    state.  Bloom-negative batch keys (definitively collision-free) drop
-    map-side; the band-key index is read only for the partitions the
-    survivors hash into; ref shingles are fetched for candidate ref urls
-    only, with the candidate side broadcast so state never shuffles.
+    state.  The batch's band keys join the band-key index; ref shingles
+    are fetched for candidate ref urls only, with the candidate side
+    broadcast so state never shuffles.  Builds a plan and runs no job.
     ``coverage`` = (merged high-water or None, per-epoch tail) from
     _index_coverage."""
-    from webdedup.bloom import BloomFilter, probe_bloom
-
     high, tail = coverage
-    bits = np.zeros(_BLOOM_M >> 6, dtype=np.uint64)
-    if high is not None:
-        bits |= np.frombuffer(
-            _bloom_file_merged(state_dir, high).read_bytes(), dtype=np.uint64
-        )
-    for e in tail:
-        bits |= np.frombuffer(_bloom_file(state_dir, e).read_bytes(), dtype=np.uint64)
-    bloom = BloomFilter(bits, _BLOOM_M, _BLOOM_K)
-
-    bkeys = _exploded_keys(batch_sigs, ["url", "shingles"])
-    # the probe is a map-side pandas UDF over the (small) batch keys; it
-    # runs twice, once for the parts collect and once inside the caller's
-    # `assigned` checkpoint — cheaper than owning a persist lifecycle
-    # across the caller's state write
-    survivors = (
-        probe_bloom(bkeys, "k64", bloom, "__maybe")
-        .where(F.col("__maybe"))
-        .withColumn("part", F.pmod("k64", F.lit(_INDEX_PARTS)).cast("int"))
-    )
-    live_parts = [r["part"] for r in survivors.select("part").distinct().collect()]
-    if not live_parts:  # nothing in the batch can collide with state
-        return batch_sigs.sparkSession.createDataFrame([], "url string, gid string")
-
-    ref = _read_index(spark, state_dir, high, tail).where(
-        F.col("part").isin(live_parts)
-    )
     cand = (
-        survivors.select("url", "shingles", "key_idx", "key_hash")
-        .join(ref, ["key_idx", "key_hash"])
+        batch_sigs.select(
+            "url", "shingles", F.posexplode("bands").alias("key_idx", "key_hash")
+        )
+        .join(_read_index(spark, state_dir, high, tail), ["key_idx", "key_hash"])
         .select("url", "shingles", "ref_url", "ref_gid")
         .distinct()
     )
@@ -450,8 +374,8 @@ def process_batch(
     may omit epoch_id (auto: next uncommitted epoch).
 
     BLOCK LIFECYCLE: everything the batch caches or checkpoints lives in
-    one scope over the whole body.  The match plan (bloom probe, index
-    join, state-shingle verify) is planned and run once, inside the
+    one scope over the whole body.  The match plan (band-key index join,
+    state-shingle verify) is planned and run once, inside the
     assignment's localCheckpoint.  The CC star forest is freed right after
     that checkpoint, the signature and new-state caches once the epoch is
     committed.  On success only the returned frame outlives the call: it
@@ -489,15 +413,15 @@ def process_batch(
         internal = connected_components(verified, scope=cc)
 
         # 2. match against accumulated reference state via the band-key
-        #    index (explodes only the batch; bloom + partition pruning on
-        #    state); committed state that no index covers is an error
+        #    index (explodes only the batch, never state); committed state
+        #    that no index covers is an error
         if committed_below:
             coverage = _index_coverage(state_dir, committed_below)
             if coverage is None:
                 raise ValueError(
                     f"{state_dir}: no band-key index covers committed epochs "
-                    f"{committed_below} (an epoch's index dir or bloom file is "
-                    "missing, or a merged index reaches past them)"
+                    f"{committed_below} (an epoch's index dir is missing, or a "
+                    "merged index reaches past them)"
                 )
             matched = _match_against_index(spark, sigs, state_dir, coverage, cfg)
         else:
@@ -514,7 +438,7 @@ def process_batch(
         new_state = held.persist(
             sigs.select("url", "shingles", "bands").join(assigned, "url")
         )
-        # index + bloom first, then the state parquet whose _SUCCESS commits
+        # index first, then the state parquet whose _SUCCESS commits
         # the epoch; each is an overwrite, so a foreachBatch replay after any
         # crash point rewrites identical artifacts (idempotent commit)
         _write_epoch_index(new_state, state_dir, epoch_id)
