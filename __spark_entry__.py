@@ -818,8 +818,8 @@ def q_substring_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = _docs_as_pages(docs)
     with Scope() as scope:
         # did space end-to-end, one url rejoin for the verified survivors
-        pairs, _ = substring_candidates(pages, cfg, did_pairs=True, scope=scope)
-        verified = verify_overlaps(pairs, pages, cfg, scope=scope)
+        pairs, _ = substring_candidates(pages, cfg, scope=scope)
+        verified, _ = verify_overlaps(pairs, pages, cfg, scope=scope)
         res = rejoin_urls(verified, doc_ids(pages)).localCheckpoint()
     return res.orderBy("url_a", "url_b")
 
@@ -859,7 +859,10 @@ def q_dedup_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the candidates_dropped audit row remain brute-force/pinned.
     """
     from webdedup.candidates import (
+        did,
+        doc_ids,
         minhash_candidates,
+        rejoin_urls,
         simhash_candidates,
         union_candidates,
     )
@@ -884,7 +887,7 @@ def q_dedup_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # attribution basis per doc: exact bigram-shingle set + text hash
         attrs = scope.persist(
             pages.select(
-                F.xxhash64("url").alias("did"),
+                did(F.col("url")).alias("did"),
                 shingle_strings_from_tokens(tokens(F.col("text")), cfg.shingle_k).alias("s"),
                 F.md5("text").alias("h"),
             )
@@ -925,10 +928,8 @@ def q_dedup_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit("near").alias("tier"), "n_pairs")
         )
 
-        ss_pairs, ss_skew = substring_candidates(pages, cfg, did_pairs=True, scope=scope)
-        verified, v_skew = verify_overlaps(
-            ss_pairs, pages, cfg, with_metrics=True, scope=scope
-        )
+        ss_pairs, ss_skew = substring_candidates(pages, cfg, scope=scope)
+        verified, v_skew = verify_overlaps(ss_pairs, pages, cfg, scope=scope)
         sub_cand = scope.checkpoint(verified.select("did_a", "did_b"))
         sub_n = (
             attributed(sub_cand)
@@ -944,8 +945,6 @@ def q_dedup_tier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # literal /tmp, NOT tempfile.gettempdir(): the oracle SQL string below
         # hardcodes the same path, and a TMPDIR override must not split them
         from pathlib import Path as _P
-
-        from webdedup.candidates import doc_ids, rejoin_urls
 
         aux = _P("/tmp") / "webdedup_oracle_aux"
         ids = doc_ids(pages)
@@ -984,7 +983,12 @@ def q_explain_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Restricted here to the two oracle-replayable methods (exact text hash,
     substring overlap); the minhash/simhash columns ride along as NULL so
     the operator surface (features.explain_scores) is exercised verbatim."""
-    from webdedup.candidates import exact_candidates, union_candidates
+    from webdedup.candidates import (
+        doc_ids,
+        exact_candidates,
+        rejoin_urls,
+        union_candidates,
+    )
     from webdedup.config import DedupConfig
     from webdedup.features import build_sbs, contains_score, explain_scores
     from webdedup.scope import Scope
@@ -996,12 +1000,10 @@ def q_explain_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         pages = scope.persist(_docs_as_pages(docs))
         ex = exact_candidates(pages)
         ss_raw, _ = substring_candidates(pages, cfg, scope=scope)
-        ss = (
-            verify_overlaps(ss_raw, pages, cfg, scope=scope)
-            .select("url_a", "url_b")
-            .withColumn("method", F.lit("substring"))
-        )
-        pairs = union_candidates(ex, ss)
+        verified, _ = verify_overlaps(ss_raw, pages, cfg, scope=scope)
+        ss = verified.select("did_a", "did_b").withColumn("method", F.lit("substring"))
+        # union in did space, then the one url rejoin
+        pairs = rejoin_urls(union_candidates(ex, ss), doc_ids(pages))
         sbs = build_sbs(pairs, pages.select("url", "text"), ["text"])
         feats = sbs.select(
             "url_a",

@@ -1,7 +1,9 @@
 """Substring (suffix-anchor) pass tests."""
 
 import pandas as pd
+from pyspark.sql import functions as F
 
+from webdedup.candidates import did, doc_ids, rejoin_urls
 from webdedup.config import DedupConfig
 from webdedup.scope import Scope
 from webdedup.substring import anchor_keys, substring_candidates, verify_overlaps
@@ -24,8 +26,11 @@ def test_anchor_detects_planted_overlap(spark):
     )
     with Scope() as scope:
         pairs, _ = substring_candidates(pages, cfg, scope=scope)
-        got = {(r["url_a"], r["url_b"]) for r in pairs.collect()}
-        verified = verify_overlaps(pairs, pages, cfg, scope=scope).collect()
+        got = {
+            (r["url_a"], r["url_b"])
+            for r in rejoin_urls(pairs, doc_ids(pages)).collect()
+        }
+        verified = verify_overlaps(pairs, pages, cfg, scope=scope)[0].collect()
     assert ("u1", "u2") in got
     assert all("u3" not in p for p in got)
 
@@ -45,10 +50,12 @@ def test_verify_rejects_short_overlap(spark):
             ("b", "shared short bit of text plus totally other content " + "y " * 100),
         ],
     )
-    pairs = spark.createDataFrame(pd.DataFrame({"url_a": ["a"], "url_b": ["b"]}))
+    # the one (a, b) pair, did-encoded with did_a < did_b
+    dids = pages.select(did(F.col("url")).alias("d"))
+    pairs = dids.agg(F.min("d").alias("did_a"), F.max("d").alias("did_b"))
     with Scope() as scope:
         # overlap < 200 chars
-        assert verify_overlaps(pairs, pages, cfg, scope=scope).count() == 0
+        assert verify_overlaps(pairs, pages, cfg, scope=scope)[0].count() == 0
 
 
 def test_anchor_selection_alignment_invariant(spark):
@@ -60,12 +67,7 @@ def test_anchor_selection_alignment_invariant(spark):
         spark,
         [("p1", "AA " + span), ("p2", "BBBBBBB CCCC DDDDD " + span)],
     )
-    from pyspark.sql import functions as F
-
-    dids = {
-        r["url"]: r["did"]
-        for r in pages.select("url", F.xxhash64("url").alias("did")).collect()
-    }
+    dids = {r["url"]: r["did"] for r in doc_ids(pages).collect()}
     keys = anchor_keys(pages, cfg).collect()
     k1 = {r["key_hash"] for r in keys if r["did"] == dids["p1"]}
     k2 = {r["key_hash"] for r in keys if r["did"] == dids["p2"]}

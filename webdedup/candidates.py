@@ -14,14 +14,17 @@ map-side-partial two-phase aggregation (see bucket_stats), oversized buckets
 DataFrame — never silently truncated.  AQE skew-join splitting backstops the
 self-joins.
 
-Output candidate schema mirrors the reference's ES output
-(ix_source, ix_target, es_score, es_rank) as:
-    (url_a, url_b, methods array<string>)  with url_a < url_b.
+Key space: every source keys its pairs on the 64-bit doc id
+``did(url)`` and emits (did_a, did_b, method) with did_a < did_b;
+union_candidates collapses them to (did_a, did_b, methods array<string>).
+``rejoin_urls(pairs, doc_ids(pages))`` is the one did -> url step, giving
+the canonical (url_a, url_b, ...) with url_a < url_b — the shape of the
+reference's ES output (ix_source, ix_target, es_score, es_rank).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig
@@ -54,24 +57,21 @@ def _pairs_from_keys(
     scope: Scope | None = None,
     carry_cols: list[str] | None = None,
     pair_filter=None,
-    id_col: str = "url",
 ) -> tuple[DataFrame, DataFrame]:
-    """Self-join within (key_idx, key_hash) buckets -> distinct
-    ({id_col}_a, {id_col}_b).
+    """Self-join within (key_idx, key_hash) buckets of (did, key_idx,
+    key_hash) rows -> distinct (did_a, did_b, method).
 
     Returns (pairs, skew_metrics).  Buckets with bucket_size > max_bucket
     are dropped entirely and accounted in skew_metrics — at web scale these
     are boilerplate/empty-page buckets whose quadratic pair blow-up would
     dominate the job; the substring + exact passes still cover their members.
 
-    id_col: the per-doc identity on the key rows.  Callers should
-    dictionary-encode the url to a 64-bit `did` BEFORE exploding keys (see
-    minhash_candidates): the exploded key table is the job's dominant
-    shuffle payload (bands x docs rows, each carrying the id + gate
-    sketch), and an 8-byte long in place of a ~60-byte url string both
-    shrinks that shuffle and keeps the self-join's sort/hash on fixed-width
-    primitives.  Urls rejoin AFTER the distinct, only for surviving pairs
-    (rejoin_urls).
+    Key rows carry the 64-bit ``did`` rather than the url, encoded BEFORE
+    the key explode: the exploded key table is the job's dominant shuffle
+    payload (bands x docs rows, each carrying the id + gate sketch), and an
+    8-byte long in place of a ~60-byte url string both shrinks that shuffle
+    and keeps the self-join's sort/hash on fixed-width primitives.  Urls
+    rejoin AFTER the distinct, only for surviving pairs (rejoin_urls).
 
     scope: the key table is scanned up to 4x downstream (bucket sizing,
     the prune join, and — through the pruned table — both sides of the
@@ -139,43 +139,47 @@ def _pairs_from_keys(
     # per-pair hamming gate out of whole-stage codegen.
     if scope is not None:
         pruned = scope.persist(pruned, StorageLevel.MEMORY_AND_DISK)
-    a, b = f"{id_col}_a", f"{id_col}_b"
     left = pruned.select(
         F.col("key_idx"),
         F.col("key_hash"),
-        F.col(id_col).alias(a),
+        F.col("did").alias("did_a"),
         *[F.col(c).alias(f"{c}_a") for c in carry_cols],
     )
     right = pruned.select(
         F.col("key_idx"),
         F.col("key_hash"),
-        F.col(id_col).alias(b),
+        F.col("did").alias("did_b"),
         *[F.col(c).alias(f"{c}_b") for c in carry_cols],
     )
     joined = left.join(right.hint("shuffle_hash"), ["key_idx", "key_hash"]).where(
-        F.col(a) < F.col(b)
+        F.col("did_a") < F.col("did_b")
     )
     if pair_filter is not None:
         # IN-JOIN pair gate: runs in the join stage, before the distinct
         # exchange — a pair dropped here never costs a shuffle byte
         joined = pair_filter(joined)
     pairs = (
-        joined.select(a, b)
+        joined.select("did_a", "did_b")
         .distinct()
         .withColumn("method", F.lit(method))
     )
     return pairs, skew_metrics
 
 
-def doc_ids(docs: DataFrame) -> DataFrame:
-    """(url, did) dictionary: did = xxhash64(url).
+def did(url: Column) -> Column:
+    """The 64-bit doc id of a url: xxhash64(url).  Every candidate source
+    keys its pairs on it, and nothing else encodes a url as a did.
 
-    Collision posture (shared with substring.verify_overlaps): a 64-bit
-    birthday collision needs ~5e9 docs for even 50% odds of ONE collision
-    corpus-wide, and its only effect is one spurious candidate pair that
-    the verification features then score on the real texts — acceptable
-    and documented up to 10^12 docs."""
-    return docs.select("url", F.xxhash64("url").alias("did"))
+    Collision posture: a 64-bit birthday collision needs ~5e9 docs for even
+    50% odds of ONE collision corpus-wide, and its only effect is one
+    spurious candidate pair that the verification features then score on
+    the real texts — acceptable and documented up to 10^12 docs."""
+    return F.xxhash64(url)
+
+
+def doc_ids(docs: DataFrame) -> DataFrame:
+    """(url, did) dictionary for rejoin_urls."""
+    return docs.select("url", did(F.col("url")).alias("did"))
 
 
 def rejoin_urls(pairs_did: DataFrame, ids: DataFrame) -> DataFrame:
@@ -203,10 +207,10 @@ def minhash_candidates(
     signatures: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
     """LSH band-bucket candidates from the `bands` column, prefiltered by
-    the MinHash similarity estimate: (did_a, did_b, method) pairs in did
-    space, plus the skew frame.  Callers union sources in did space and
-    rejoin urls ONCE after the union dedup (``rejoin_urls``: two joins in
-    total instead of two per source).
+    the MinHash similarity estimate: (did_a, did_b, method) pairs plus the
+    skew frame.  Callers union sources in did space and rejoin urls ONCE
+    after the union dedup (``rejoin_urls``: two joins in total instead of
+    two per source).
 
     Boilerplate-heavy corpora make the LSH s-curve's low-J tail expensive:
     docs sharing only chrome (true J ~ 0.1) still band-collide a few
@@ -222,14 +226,14 @@ def minhash_candidates(
     the signatures frame in their scope first (``scope.persist(sigs)``),
     or the signature UDF scan reruns per consumer.
     """
-    use_mini = cfg.mini_max_hamming > 0 and "mini" in signatures.columns
+    use_mini = cfg.mini_max_hamming > 0
     # dictionary-encode url -> 64-bit did BEFORE the explode: the band-key
     # table is bands(42) rows/doc and the job's dominant shuffle payload;
     # an 8 B long replaces a ~60 B url on every one of them (urls rejoin
     # below, only for surviving pairs) — measured the biggest lever on the
     # one-box memory-bandwidth wall at high core counts (BENCH/BASELINE.md)
     keys = signatures.select(
-        F.xxhash64("url").alias("did"),
+        did(F.col("url")).alias("did"),
         *(["mini"] if use_mini else []),
         F.posexplode("bands").alias("key_idx", "key_hash"),
     )
@@ -248,7 +252,6 @@ def minhash_candidates(
         "minhash",
         carry_cols=["mini"] if use_mini else None,
         pair_filter=mini_gate if use_mini else None,
-        id_col="did",
     )
 
 
@@ -268,7 +271,7 @@ def simhash_candidates(
     # did-encoded key rows (see minhash_candidates): 8 B id + 8 B signature
     # per exploded block row, urls rejoined only for survivors
     keys = signatures.select(
-        F.xxhash64("url").alias("did"),
+        did(F.col("url")).alias("did"),
         "simhash",
         F.posexplode("blocks").alias("key_idx", "key_hash"),
     )
@@ -287,22 +290,18 @@ def simhash_candidates(
         "simhash",
         carry_cols=["simhash"],
         pair_filter=hamming_gate,
-        id_col="did",
     )
 
 
-def _star_pairs(
-    keyed: DataFrame, key_col: str, method: str, did_pairs: bool
-) -> DataFrame:
-    """Min-url star pairs over a (url, key) frame — the shared shape of
-    exact_candidates and url_candidates.
+def _star_pairs(keyed: DataFrame, key_col: str, method: str) -> DataFrame:
+    """Min-url star pairs over a (url, key) frame as (did_a, did_b, method)
+    — the shared shape of exact_candidates and url_candidates.
 
     Pairs each doc in a key group with the group's minimum url — linear in
     group size (a star, not a clique); connected components restores the
-    full group downstream.  did_pairs=True projects the star edges to
-    (did_a, did_b) for the pipeline's did-space union (the star root stays
-    the min-URL doc; only the encoding changes, so components — and the
-    min-url gids CC derives — are identical).
+    full group downstream.  The star root is the min-URL doc; the edges are
+    then did-encoded, so components — and the min-url gids CC derives —
+    are the same as in url space.
     """
     keeper = keyed.groupBy(key_col).agg(
         F.min("url").alias("url_a"), F.count("*").alias("n")
@@ -310,40 +309,34 @@ def _star_pairs(
     # keeper is corpus-sized (one row per distinct key) — the shuffle_hash
     # pin keeps the planner from broadcasting it off a bad agg-output
     # estimate, and reuses the groupBy's key exchange without a sort
-    out = (
+    h_a, h_b = did(F.col("url_a")), did(F.col("url"))
+    return (
         keyed.join(keeper.where(F.col("n") >= 2).hint("shuffle_hash"), key_col)
         .where(F.col("url") != F.col("url_a"))
-        .select("url_a", F.col("url").alias("url_b"))
-        .withColumn("method", F.lit(method))
-    )
-    if did_pairs:
-        h_a, h_b = F.xxhash64("url_a"), F.xxhash64("url_b")
-        out = out.select(
+        .select(
             F.least(h_a, h_b).alias("did_a"),
             F.greatest(h_a, h_b).alias("did_b"),
-            "method",
+            F.lit(method).alias("method"),
         )
-    return out
+    )
 
 
-def exact_candidates(pages: DataFrame, did_pairs: bool = False) -> DataFrame:
+def exact_candidates(pages: DataFrame) -> DataFrame:
     """Exact-duplicate pairs via text-hash grouping (the hash-groupBy dedup).
     Star/keeper semantics: see _star_pairs."""
     hashed = pages.select(
         "url", F.xxhash64(F.coalesce(F.col("text"), F.lit(""))).alias("text_hash")
     )
-    return _star_pairs(hashed, "text_hash", "exact", did_pairs)
+    return _star_pairs(hashed, "text_hash", "exact")
 
 
 def union_candidates(*sources: DataFrame) -> DataFrame:
-    """Union candidate sources, collecting per-pair provenance methods.
-    Works in either key space: (url_a, url_b) or did-encoded (did_a, did_b)
-    — the pipeline unions in did space and rejoins urls once afterwards."""
+    """Union (did_a, did_b, method) candidate sources into (did_a, did_b,
+    methods), collecting per-pair provenance."""
     unioned = sources[0]
     for s in sources[1:]:
         unioned = unioned.unionByName(s)
-    keys = ["did_a", "did_b"] if "did_a" in unioned.columns else ["url_a", "url_b"]
-    return unioned.groupBy(*keys).agg(
+    return unioned.groupBy("did_a", "did_b").agg(
         F.sort_array(F.collect_set("method")).alias("methods")
     )
 
@@ -361,7 +354,7 @@ def rank_candidates(scored: DataFrame, score_col: str, k: int | None = None) -> 
     return ranked
 
 
-def url_candidates(pages: DataFrame, did_pairs: bool = False) -> DataFrame:
+def url_candidates(pages: DataFrame) -> DataFrame:
     """URL-level duplicate pairs: pages whose canonicalized urls collide
     (normalize.canonical_url — scheme/www/fragment/trailing-slash/host-case
     variants of one address).  Same linear star shape and keeper rule as
@@ -372,4 +365,4 @@ def url_candidates(pages: DataFrame, did_pairs: bool = False) -> DataFrame:
     from webdedup.normalize import canonical_url
 
     keyed = pages.select("url", canonical_url(F.col("url")).alias("curl"))
-    return _star_pairs(keyed, "curl", "url", did_pairs)
+    return _star_pairs(keyed, "curl", "url")

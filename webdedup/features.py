@@ -320,20 +320,15 @@ def explain_scores(features: DataFrame) -> DataFrame:
     )
 
 
-def triage_predicates(sj, cfg: DedupConfig, methods=None):
+def triage_predicates(sj, cfg: DedupConfig, methods):
     """Shared (sure, nomatch) predicates over a NULL-FREE shingle-jaccard
     column — the single source of truth for the reference's pruning slicing
     (pruningpipe.py:95-103), used by both the mixed-ratio UDF gate here and
     triage_rule (triage.py).  ``methods`` is the provenance array column
-    when available (exact pairs are always sure; substring-verified pairs
-    are never no-match)."""
-    if methods is not None:
-        has = lambda m: F.array_contains(methods, m)  # noqa: E731
-        sure = has("exact") | (sj >= cfg.sure_threshold)
-        nomatch = (sj < cfg.nomatch_threshold) & ~has("substring")
-    else:
-        sure = sj >= cfg.sure_threshold
-        nomatch = sj < cfg.nomatch_threshold
+    (exact pairs are always sure; substring-verified pairs are never
+    no-match)."""
+    sure = F.array_contains(methods, "exact") | (sj >= cfg.sure_threshold)
+    nomatch = (sj < cfg.nomatch_threshold) & ~F.array_contains(methods, "substring")
     return sure, nomatch
 
 
@@ -357,7 +352,7 @@ def compute_features(
     *,
     scope: Scope,
 ) -> DataFrame:
-    """Candidate pairs -> feature table (url_a, url_b, methods?, f_1..f_k).
+    """Candidate pairs -> feature table (url_a, url_b, methods, f_1..f_k).
 
     ``docs`` must carry (url, text, lang, shingles, mini, simhash) — i.e.
     pages joined with compute_signatures output (shingles = the bottom-k
@@ -427,8 +422,7 @@ def compute_features(
         ),
         F.lit(0.0),
     )
-    methods = F.col("methods") if "methods" in pairs.columns else None
-    sure, nomatch = triage_predicates(sj, cfg, methods)
+    sure, nomatch = triage_predicates(sj, cfg, F.col("methods"))
     mixed = ~(sure | nomatch)
     lev_a = F.when(mixed, lev_a)
     lev_b = F.when(mixed, lev_b)

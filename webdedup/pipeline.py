@@ -101,7 +101,10 @@ def run_dedup(
     unwinds; only the stage outputs it returns stay cached, and those too
     are freed if a later stage raises.  A caller that wants ONE stage
     lazily should call that stage's function directly (compute_signatures,
-    candidates.minhash_candidates, ...) — they compose on plain DataFrames.
+    candidates.minhash_candidates, ...) — they compose on plain DataFrames,
+    and every candidate source returns (did_a, did_b, method) pairs that
+    ``candidates.rejoin_urls(pairs, candidates.doc_ids(pages))`` turns into
+    url pairs.
     """
     if decision not in ("rule", "ml"):
         raise ValueError("decision must be 'rule' or 'ml'")
@@ -146,15 +149,13 @@ def run_dedup(
             # (two joins total, vs two per source — see candidates.rejoin_urls)
             mh_pairs, mh_skew = cand.minhash_candidates(signatures, cfg)
             sh_pairs, sh_skew = cand.simhash_candidates(signatures, cfg)
-            ex_pairs = cand.exact_candidates(pages, did_pairs=True)
+            ex_pairs = cand.exact_candidates(pages)
             skew_sources[:] = [mh_skew, sh_skew]
             sources = [mh_pairs, sh_pairs, ex_pairs]
             if with_substring:
-                ss_pairs, ss_skew = sub.substring_candidates(
-                    pages, cfg, did_pairs=True, scope=keys
-                )
+                ss_pairs, ss_skew = sub.substring_candidates(pages, cfg, scope=keys)
                 verified, verify_skew = sub.verify_overlaps(
-                    ss_pairs, pages, cfg, with_metrics=True, scope=keys
+                    ss_pairs, pages, cfg, scope=keys
                 )
                 skew_sources.extend([ss_skew, verify_skew])
                 sources.append(

@@ -386,7 +386,7 @@ def process_batch(
     run_incremental's foreachBatch does this automatically.  On any
     exception every block the batch created is freed before it
     propagates."""
-    from webdedup.candidates import minhash_candidates
+    from webdedup.candidates import did, minhash_candidates
     from webdedup.cluster import connected_components
 
     committed = _committed_epochs(state_dir)
@@ -398,9 +398,9 @@ def process_batch(
 
         # 1. batch-internal grouping (new records may duplicate each other),
         #    verified in did space: one join per side fetches url AND
-        #    shingles (collision posture: candidates.doc_ids)
+        #    shingles (collision posture: candidates.did)
         internal_pairs, _ = minhash_candidates(sigs, cfg)
-        docs = sigs.select(F.xxhash64("url"), "url", "shingles")
+        docs = sigs.select(did(F.col("url")), "url", "shingles")
         verified = (
             internal_pairs.join(docs.toDF("did_a", "url_a", "sh_a"), "did_a")
             .join(docs.toDF("did_b", "url_b", "sh_b"), "did_b")

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from webdedup.candidates import _pairs_from_keys
+from webdedup.candidates import _pairs_from_keys, did
 from webdedup.config import DedupConfig
 from webdedup.scope import Scope
 from webdedup.signatures import _mix64
@@ -102,7 +102,7 @@ def make_gram_hash_udf(g: int, sel: int):
 
 def anchor_keys(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Content-defined anchors as (did, key_idx=0, key_hash) rows — did is
-    the 64-bit url dictionary id (candidates.doc_ids), so the anchor
+    the 64-bit doc id (candidates.did), so the anchor
     explode (the densest key table in the engine: one row per selected
     window) shuffles 8 B ids instead of url strings.
 
@@ -114,7 +114,7 @@ def anchor_keys(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     udf = make_gram_hash_udf(cfg.anchor_len, cfg.anchor_stride)
     return (
         pages.select(
-            F.xxhash64("url").alias("did"),
+            did(F.col("url")).alias("did"),
             F.explode(udf(F.col("text"))).alias("key_hash"),
         )
         .withColumn("key_idx", F.lit(0))
@@ -122,48 +122,39 @@ def anchor_keys(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def substring_candidates(
-    pages: DataFrame, cfg: DedupConfig, did_pairs: bool = False, *, scope: Scope
+    pages: DataFrame, cfg: DedupConfig, *, scope: Scope
 ) -> tuple[DataFrame, DataFrame]:
-    """(pairs(url_a, url_b, method='substring'), skew_metrics).
-    did_pairs=True keeps the pairs did-encoded (did_a, did_b) for the
-    pipeline's single post-union rejoin; verify_overlaps accepts both.
-    The anchor key tables are held in ``scope``: close it once the pairs
-    and skew metrics are materialized."""
-    from webdedup.candidates import doc_ids, rejoin_urls
-
-    keys = anchor_keys(pages, cfg)
+    """(pairs(did_a, did_b, method='substring'), skew_metrics): docs sharing
+    a rare anchor, in the did space of every candidate source (urls come
+    back through candidates.rejoin_urls).  The anchor key tables are held
+    in ``scope``: close it once the pairs and skew metrics are
+    materialized."""
     # scope: the anchor scan is a pandas-UDF pass over the full corpus;
     # without the persist it re-executes once per downstream consumer
     # (measured as the bulk of a 63s sf0.1 query).
-    pairs_did, skew = _pairs_from_keys(
-        keys,
+    return _pairs_from_keys(
+        anchor_keys(pages, cfg),
         cfg,
         "substring",
         max_bucket=cfg.anchor_max_docs,
         scope=scope,
-        id_col="did",
     )
-    if did_pairs:
-        return pairs_did, skew
-    return rejoin_urls(pairs_did, doc_ids(pages)), skew
 
 
 def verify_overlaps(
     pairs: DataFrame,
     pages: DataFrame,
     cfg: DedupConfig,
-    with_metrics: bool = False,
     *,
     scope: Scope,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Keep pairs sharing at least one exact min_overlap_chars-char substring.
 
-    Returns (url_a, url_b, n_shared_grams); n_shared_grams >= 1 certifies a
-    common substring of length >= min_overlap_chars (each shared dense-gram
-    hash is one aligned exact window).  Accepts url pairs (url_a, url_b) or
-    did pairs (did_a, did_b — candidates.doc_ids encoding) and returns the
-    matching key columns.  with_metrics=True returns
-    (verified, skew_metrics) where skew_metrics accounts the gram buckets
+    Takes did pairs (did_a, did_b) with did_a < did_b, as every candidate
+    source emits them, and returns (verified, skew_metrics).  verified is
+    (did_a, did_b, n_shared_grams); n_shared_grams >= 1 certifies a common
+    substring of length >= min_overlap_chars (each shared dense-gram hash
+    is one aligned exact window).  skew_metrics accounts the gram buckets
     dropped by the verify_max_docs cap (same schema as the candidate-side
     skew metrics) — the capped mass is REPORTED, never silently truncated.
     Mixed-hotness caveat: a pair admitted via a rare anchor whose only
@@ -190,31 +181,19 @@ def verify_overlaps(
     """
     from pyspark import StorageLevel
 
-    did_space = "did_a" in pairs.columns
-    if did_space:
-        p = pairs.select("did_a", "did_b")
-        members = (
-            p.select(F.col("did_a").alias("m_did"))
-            .unionByName(p.select(F.col("did_b").alias("m_did")))
-            .distinct()
-        )
-        docs = pages.join(
-            members, F.xxhash64("url") == F.col("m_did"), "left_semi"
-        )
-    else:
-        p = pairs.select("url_a", "url_b")
-        members = (
-            p.select(F.col("url_a").alias("url"))
-            .unionByName(p.select(F.col("url_b").alias("url")))
-            .distinct()
-        )
-        docs = pages.join(members, "url", "left_semi")
+    p = pairs.select("did_a", "did_b")
+    members = (
+        p.select(F.col("did_a").alias("m_did"))
+        .unionByName(p.select(F.col("did_b").alias("m_did")))
+        .distinct()
+    )
+    docs = pages.join(members, did(F.col("url")) == F.col("m_did"), "left_semi")
     udf = make_gram_hash_udf(cfg.min_overlap_chars, 1)
     grams = docs.select(
         # compact 64-bit doc id: the self-join + count shuffle then moves
         # 16 B/row instead of a ~60 B url string per side (urls rejoin at
         # the end, only for surviving pairs)
-        F.xxhash64("url").alias("did"),
+        did(F.col("url")).alias("did"),
         F.explode(udf(F.col("text"))).alias("gram"),
     )
     # bucket-size gate as a window count: one shuffle on gram (reused by the
@@ -245,24 +224,9 @@ def verify_overlaps(
         .groupBy("did_lo", "did_hi")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
     )
-    if did_space:
-        # did pairs are already canonical (did_a < did_b from the bucket
-        # self-join) — join the shared-gram counts directly
-        verified = p.join(
-            counts,
-            (p["did_a"] == counts["did_lo"]) & (p["did_b"] == counts["did_hi"]),
-        ).select("did_a", "did_b", "n_shared_grams")
-    else:
-        h_a, h_b = F.xxhash64("url_a"), F.xxhash64("url_b")
-        pk = p.select(
-            "url_a",
-            "url_b",
-            F.least(h_a, h_b).alias("did_lo"),
-            F.greatest(h_a, h_b).alias("did_hi"),
-        )
-        verified = pk.join(counts, ["did_lo", "did_hi"]).select(
-            "url_a", "url_b", "n_shared_grams"
-        )
-    if with_metrics:
-        return verified, skew_metrics
-    return verified
+    # did_a < did_b on every input pair, as on every counted (did_lo, did_hi)
+    verified = p.join(
+        counts,
+        (p["did_a"] == counts["did_lo"]) & (p["did_b"] == counts["did_hi"]),
+    )
+    return verified.select("did_a", "did_b", "n_shared_grams"), skew_metrics
