@@ -5,10 +5,12 @@ Usage: python scripts/analyze_eventlog.py /tmp/spark-events/<app-id> [top_n]
        python scripts/analyze_eventlog.py perfbench/.work/events --jobs [PHASE]
 
 ``--jobs`` prints job counts instead, grouped by call site (the name of each
-job's last stage, e.g. ``collect at /.../pipeline.py:194``).  With PHASE,
-only jobs whose ``perfbench.phase`` local property equals it are counted
-(the benchmark tags each measured unit ``m0``, ``m1``, ...).  A directory
-of application logs is read log by log, in name order.
+job's last stage, e.g. ``collect at /.../pipeline.py:194``), then the jobs
+and tasks of each root SQL execution in submission order, so the
+adaptive-execution sub-jobs of one write are told apart from another's.
+With PHASE, only jobs whose ``perfbench.phase`` local property equals it
+are counted (the benchmark tags each measured unit ``m0``, ``m1``, ...).
+A directory of application logs is read log by log, in name order.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 from collections import Counter
 
@@ -119,12 +122,67 @@ def job_counts(path: str, phase: str | None = None) -> Counter:
     return counts
 
 
+_WRITE_TARGET = re.compile(r"InsertIntoHadoopFsRelationCommand\n.*?Arguments: file:(\S+?),", re.S)
+
+
+def executions(path: str, phase: str | None = None) -> list[dict]:
+    """One row per root SQL execution that submitted a job, in submission
+    order: its SQL action, the directory it writes (parquet writes), and
+    its jobs and tasks (sub-executions and adaptive-execution sub-jobs
+    included).  A job outside any SQL execution is a row of its own.  Ids
+    restart in each application log, so a row's id is prefixed ``s<n>.``,
+    n counting the logs read."""
+    rows: dict[str, dict] = {}
+    info: dict[str, tuple[str, str]] = {}  # execution id -> (action, target)
+    stage_row: dict[int, dict] = {}
+    app = -1
+    for line in _lines(path):
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        kind = ev.get("Event", "")
+        if kind == "SparkListenerLogStart":
+            app += 1
+            info.clear()
+            stage_row.clear()
+        elif kind.endswith("SQLExecutionStart"):
+            m = _WRITE_TARGET.search(ev.get("physicalPlanDescription", ""))
+            target = "/".join(m.group(1).rstrip("/").split("/")[-2:]) if m else ""
+            info[str(ev["executionId"])] = (ev.get("description", ""), target)
+        elif kind == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            if phase is not None and props.get(PHASE_KEY) != phase:
+                continue
+            root = props.get("spark.sql.execution.root.id") or props.get(
+                "spark.sql.execution.id"
+            )
+            key = f"s{app}." + (f"sql {root}" if root else f"job {ev['Job ID']}")
+            if key not in rows:
+                infos = ev.get("Stage Infos") or [{"Stage ID": 0, "Stage Name": "?"}]
+                site = max(infos, key=lambda si: si["Stage ID"])["Stage Name"]
+                action, target = info.get(root or "", (site.split("\n")[0], ""))
+                rows[key] = {"id": key, "action": action, "target": target,
+                             "jobs": 0, "tasks": 0}
+            rows[key]["jobs"] += 1
+            for sid in ev.get("Stage IDs", []):
+                stage_row.setdefault(sid, rows[key])
+        elif kind == "SparkListenerTaskEnd" and ev["Stage ID"] in stage_row:
+            stage_row[ev["Stage ID"]]["tasks"] += 1
+    return list(rows.values())
+
+
 def print_jobs(path: str, phase: str | None) -> None:
     counts = job_counts(path, phase)
     label = "all phases" if phase is None else f"phase {phase}"
     print(f"{sum(counts.values())} jobs ({label}), by call site <- SQL action:")
     for (site, action), n in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])):
         print(f"  {n:5d}  {site}" + (f"  <-  {action}" if action and action != site else ""))
+    print("\nby root SQL execution, in submission order:")
+    print("   jobs  tasks  execution  action")
+    for r in executions(path, phase):
+        target = f"  -> {r['target']}" if r["target"] else ""
+        print(f"  {r['jobs']:5d} {r['tasks']:6d}  {r['id']:>12}  {r['action']}{target}")
 
 
 def main() -> None:

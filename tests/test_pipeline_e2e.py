@@ -93,8 +93,8 @@ def test_checkpoint_resume(spark, corpus, cfg, tmp_path, memory_run, jobs_submit
     """Cold and resumed checkpointed runs, against the in-memory run: one
     code path over two stage stores returns the same keys, the same columns
     (never the checkpoint layout's `part`) and the same clusters and
-    decisions rows.  Job pins: the runner that branched on the store
-    submitted 66 jobs in memory, 64 checkpointed and 2 on resume here."""
+    decisions rows.  Job pins: 61 jobs in memory, 51 checkpointed and 2 on
+    resume here."""
     ck = str(tmp_path / "ck")
     out1, cold_jobs = jobs_submitted(
         "resume-cold", lambda: run_dedup(spark, corpus["pages"], cfg, checkpoint_dir=ck)
@@ -112,7 +112,7 @@ def test_checkpoint_resume(spark, corpus, cfg, tmp_path, memory_run, jobs_submit
 
     mem, mem_jobs = memory_run
     jobs = (mem_jobs, cold_jobs, warm_jobs)
-    assert mem_jobs <= 66 and cold_jobs <= 64 and warm_jobs <= 2, jobs
+    assert mem_jobs <= 61 and cold_jobs <= 51 and warm_jobs <= 2, jobs
     assert {*mem, "_checkpointer"} == out1.keys() == out2.keys()
     for k in mem:
         assert mem[k].columns == out1[k].columns == out2[k].columns, k
@@ -140,20 +140,26 @@ def test_checkpoint_resume(spark, corpus, cfg, tmp_path, memory_run, jobs_submit
     assert all(a == "computed" for _, a in ev3)
 
 
-def test_skew_caps_fire_and_recall_holds(spark, cfg, tmp_path):
+@pytest.fixture(scope="module")
+def boiler(spark):
+    """400 pages, 60% sharing a boilerplate header/footer (~240 docs, far
+    above anchor_max_docs=64), and their planted truth pairs."""
+    from webdedup.synth import generate_pages, pages_to_spark
+
+    pages_pd, truth_pairs, _ = generate_pages(n_docs=400, seed=13, boiler_fraction=0.6)
+    pages = pages_to_spark(spark, pages_pd, partitions=4).cache()
+    pages.count()
+    yield pages, spark.createDataFrame(truth_pairs).select("url_a", "url_b")
+    pages.unpersist()
+
+
+def test_skew_caps_fire_and_recall_holds(spark, cfg, tmp_path, boiler):
     """North-rule skew contract, end to end: on a corpus whose boilerplate
     cohort EXCEEDS the anchor bucket cap, (a) the candidates-stage manifest
     reports the dropped mass per method, and (b) planted-truth recall still
     holds — the caps drop boilerplate collisions, not true duplicates."""
-    from webdedup.synth import generate_pages, pages_to_spark
-
-    # boiler_fraction 0.6 @ 400 docs -> ~240 docs share the boilerplate
-    # header/footer, far above anchor_max_docs=64: the anchor buckets for
-    # the shared chrome MUST be capped
-    pages_pd, truth_pairs, _ = generate_pages(
-        n_docs=400, seed=13, boiler_fraction=0.6
-    )
-    pages = pages_to_spark(spark, pages_pd, partitions=4)
+    # the anchor buckets for the shared chrome MUST be capped
+    pages, truth = boiler
     out = run_dedup(
         spark, pages, cfg, checkpoint_dir=str(tmp_path / "ck"), with_golden=False
     )
@@ -164,7 +170,6 @@ def test_skew_caps_fire_and_recall_holds(spark, cfg, tmp_path):
     assert drops["substring"]["max_dropped_bucket"] > 64, drops
 
     pred = pairs_from_clusters(out["clusters"])
-    truth = spark.createDataFrame(truth_pairs).select("url_a", "url_b")
     m = pair_metrics(pred, truth)
     assert m["recall"] >= 0.99, (m, drops)
 
@@ -175,6 +180,49 @@ def test_skew_caps_fire_and_recall_holds(spark, cfg, tmp_path):
     assert by_method.get("minhash", 0) > 0, by_method
     assert by_method.get("exact", 0) > 0, by_method
     assert sum(by_method.values()) > 0
+
+
+@pytest.mark.parametrize(
+    "knobs, fires",
+    [
+        # LSH and anchor caps both drop buckets
+        (dict(max_bucket_size=4), {"minhash", "substring"}),
+        # the gram buckets of the verify pass overflow their cap
+        (dict(verify_max_docs=2), {"substring", "substring_verify"}),
+        # every bucket capped: the sources yield no pairs at all
+        (dict(max_bucket_size=1, anchor_max_docs=1), {"minhash", "simhash", "substring"}),
+    ],
+    ids=["lsh_and_anchor_caps", "verify_cap", "no_pairs"],
+)
+def test_skew_drops_equal_the_sources_skew_frames(spark, boiler, tmp_path, knobs, fires):
+    """The candidates manifest's skew_drops, observed during the stage's own
+    work, equal the rows the capped sources' skew frames aggregate."""
+    from webdedup.candidates import minhash_candidates, simhash_candidates
+    from webdedup.scope import Scope
+    from webdedup.substring import substring_candidates, verify_overlaps
+
+    pages, _ = boiler
+    cfg = DedupConfig(**knobs)
+    out = run_dedup(
+        spark, pages, cfg, checkpoint_dir=str(tmp_path / "ck"), with_golden=False
+    )
+    drops = out["_checkpointer"].manifest("candidates")["metrics"]["skew_drops"]
+
+    sigs = compute_signatures(pages, cfg).cache()
+    mh_pairs, mh_skew = minhash_candidates(sigs, cfg)
+    sh_pairs, sh_skew = simhash_candidates(sigs, cfg)
+    with Scope() as scope:
+        ss_pairs, ss_skew = substring_candidates(pages, cfg, scope=scope)
+        _, verify_skew = verify_overlaps(ss_pairs, pages, cfg, scope=scope)
+        union = mh_skew.unionByName(sh_skew).unionByName(ss_skew).unionByName(verify_skew)
+        expected = [r.asDict() for r in union.collect()]
+        n_pairs = mh_pairs.count() + sh_pairs.count() + ss_pairs.count()
+    sigs.unpersist()
+
+    assert drops == expected
+    assert {d["method"] for d in drops if d["dropped_buckets"] > 0} == fires, drops
+    if knobs.get("max_bucket_size") == 1:
+        assert n_pairs == 0
 
 
 def test_checkpoint_resume_validates_data(spark, corpus, cfg, tmp_path):

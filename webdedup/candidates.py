@@ -24,7 +24,7 @@ reference's ES output (ix_source, ix_target, es_score, es_rank).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from webdedup.config import DedupConfig
@@ -49,6 +49,18 @@ def bucket_stats(keys: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
 
 
+def _observe(
+    df: DataFrame, observation: Observation | None, aggs: list[Column]
+) -> DataFrame:
+    """df with ``aggs`` observed into ``observation`` by whichever action
+    first runs df's plan (df itself when observation is None).  Spark
+    allows no DISTINCT aggregate here.  When AQE prunes df's subtree out of
+    the executed plan (its sibling side came up empty), the Observation
+    completes with no row and ``get`` raises; the skew frame a source
+    returns next to its pairs computes the same row with a job."""
+    return df if observation is None else df.observe(observation, *aggs)
+
+
 def _pairs_from_keys(
     keys: DataFrame,
     cfg: DedupConfig,
@@ -57,6 +69,7 @@ def _pairs_from_keys(
     scope: Scope | None = None,
     carry_cols: list[str] | None = None,
     pair_filter=None,
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Self-join within (key_idx, key_hash) buckets of (did, key_idx,
     key_hash) rows -> distinct (did_a, did_b, method).
@@ -65,6 +78,10 @@ def _pairs_from_keys(
     are dropped entirely and accounted in skew_metrics — at web scale these
     are boilerplate/empty-page buckets whose quadratic pair blow-up would
     dominate the job; the substring + exact passes still cover their members.
+    skew_metrics is a lazy one-row frame.  ``observation``, when given,
+    receives the same row from the bucket-stats pass the pairs plan runs
+    anyway, so a caller that materializes the pairs reads the dropped mass
+    with no job of its own (see ``_observe``).
 
     Key rows carry the 64-bit ``did`` rather than the url, encoded BEFORE
     the key explode: the exploded key table is the job's dominant shuffle
@@ -78,25 +95,26 @@ def _pairs_from_keys(
     self-join).  When keys derive from a persisted signature table
     (minhash/simhash) the re-scan is a cheap cached explode; when they come
     from a pandas-UDF corpus scan (substring anchors) the whole UDF
-    re-executes per consumer — pass the caller's scope there so the scan
-    runs once AND the pruned table below is cached (MEMORY_AND_DISK,
-    spill-safe at scale), both held until the caller closes the scope.
+    re-executes per consumer — pass the caller's scope there: the key table
+    and the pruned table below are then each filled by ONE eager job
+    (``Scope.checkpoint``), held until the caller closes the scope.  So the
+    call itself runs the key scan, the bucket sizing and the prune.
     """
-    from pyspark import StorageLevel
-
     max_bucket = max_bucket or cfg.max_bucket_size
     if scope is not None:
-        keys = scope.persist(keys, StorageLevel.MEMORY_AND_DISK)
+        keys = scope.checkpoint(keys)
     stats = bucket_stats(keys, cfg)
-    ok = stats.where(
-        (F.col("bucket_size") >= 2) & (F.col("bucket_size") <= max_bucket)
-    )
-    dropped = stats.where(F.col("bucket_size") > max_bucket)
-    skew_metrics = dropped.agg(
+    size = F.col("bucket_size")
+    over = F.when(size > max_bucket, size)
+    skew_row = [
         F.lit(method).alias("method"),
-        F.count("*").alias("dropped_buckets"),
-        F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("dropped_rows"),
-        F.coalesce(F.max("bucket_size"), F.lit(0)).alias("max_dropped_bucket"),
+        F.count(over).alias("dropped_buckets"),
+        F.coalesce(F.sum(over), F.lit(0)).alias("dropped_rows"),
+        F.coalesce(F.max(over), F.lit(0)).alias("max_dropped_bucket"),
+    ]
+    skew_metrics = stats.agg(*skew_row)
+    ok = _observe(stats, observation, skew_row).where(
+        (size >= 2) & (size <= max_bucket)
     )
 
     carry_cols = carry_cols or []
@@ -123,9 +141,15 @@ def _pairs_from_keys(
     # NOT fire across the join's two identical subtrees (verified on the
     # executed plan: 0 ReusedExchange), so without a cache the key-table
     # exchange, the bucket-stats pass and the key derivation all run TWICE
-    # per source.  Persist pruned ONLY when the keys are UDF-derived
+    # per source.  Checkpoint pruned ONLY when the keys are UDF-derived
     # (a scope is passed — substring anchors), where the recompute is a second
-    # full corpus scan through Python.  For signature-derived keys
+    # full corpus scan through Python.  Eager, not persist(): AQE plans one
+    # cache stage per reader of a persisted frame, and each reader submits
+    # its own fill job while the cache is still empty (6 jobs for the 3 uses
+    # of the substring pairs x 2 join sides, 5 of them re-reading the first
+    # one's blocks); the checkpoint's one eager job fills the table, at
+    # localCheckpoint's spill-safe MEMORY_AND_DISK level, before any reader
+    # is planned.  For signature-derived keys
     # (minhash/simhash) the recompute is an explode of the already-cached
     # signature table + one exchange, and an interleaved same-hour A/B at
     # 150k pages/local[8] measured the unconditional MEMORY_AND_DISK cache
@@ -138,7 +162,7 @@ def _pairs_from_keys(
     # higher-order-function lambdas evaluate interpreted, which took the
     # per-pair hamming gate out of whole-stage codegen.
     if scope is not None:
-        pruned = scope.persist(pruned, StorageLevel.MEMORY_AND_DISK)
+        pruned = scope.checkpoint(pruned)
     left = pruned.select(
         F.col("key_idx"),
         F.col("key_hash"),
@@ -204,7 +228,7 @@ def rejoin_urls(pairs_did: DataFrame, ids: DataFrame) -> DataFrame:
 
 
 def minhash_candidates(
-    signatures: DataFrame, cfg: DedupConfig
+    signatures: DataFrame, cfg: DedupConfig, observation: Observation | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """LSH band-bucket candidates from the `bands` column, prefiltered by
     the MinHash similarity estimate: (did_a, did_b, method) pairs plus the
@@ -224,7 +248,8 @@ def minhash_candidates(
     The band-key table is re-derived from ``signatures`` by each of its up
     to 4 consumers (see _pairs_from_keys): library callers should persist
     the signatures frame in their scope first (``scope.persist(sigs)``),
-    or the signature UDF scan reruns per consumer.
+    or the signature UDF scan reruns per consumer.  ``observation``
+    receives the skew row when the pairs run (see _pairs_from_keys).
     """
     use_mini = cfg.mini_max_hamming > 0
     # dictionary-encode url -> 64-bit did BEFORE the explode: the band-key
@@ -252,11 +277,12 @@ def minhash_candidates(
         "minhash",
         carry_cols=["mini"] if use_mini else None,
         pair_filter=mini_gate if use_mini else None,
+        observation=observation,
     )
 
 
 def simhash_candidates(
-    signatures: DataFrame, cfg: DedupConfig
+    signatures: DataFrame, cfg: DedupConfig, observation: Observation | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """SimHash prefix-block candidates, hamming-filtered JVM-side, as
     (did_a, did_b, method) pairs plus the skew frame (see
@@ -266,7 +292,8 @@ def simhash_candidates(
     guarantees the pair shares at least one block value.
 
     As for minhash_candidates: persist the signatures frame in the
-    caller's scope first, or the signature UDF scan reruns per consumer.
+    caller's scope first, or the signature UDF scan reruns per consumer;
+    ``observation`` receives the skew row when the pairs run.
     """
     # did-encoded key rows (see minhash_candidates): 8 B id + 8 B signature
     # per exploded block row, urls rejoined only for survivors
@@ -290,6 +317,7 @@ def simhash_candidates(
         "simhash",
         carry_cols=["simhash"],
         pair_filter=hamming_gate,
+        observation=observation,
     )
 
 

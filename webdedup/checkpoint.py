@@ -21,11 +21,15 @@ stage metrics.  `Checkpointer.stage()` recomputes a stage only when its
 identity hash (config + parents + stage name) has no matching manifest on
 disk, so a killed run resumes from the last completed stage.
 
-The bookkeeping rides on the stage's own write; no Spark job runs after it.
-``row_count`` and any extra observed aggregates come from one
-``Observation`` on the frame the writer writes.  ``partition_counts`` are
-summed from the committed files' parquet footers, read with pyarrow, keyed
-by partition directory (``part=<k>``), or by file name when unpartitioned.
+The bookkeeping rides on the stage's own write; the store runs no Spark
+job after it.  ``row_count`` and any extra observed aggregates come from
+one ``Observation`` on the frame the writer writes.  A ``metrics``
+callable runs after the write, so any job it submits is its own: the
+candidates stage's reads the skew rows its sources observed during the
+stage's work, and aggregates only a row AQE kept from being observed.
+``partition_counts`` are summed from the committed files' parquet
+footers, read with pyarrow, keyed by partition directory (``part=<k>``),
+or by file name when unpartitioned.
 The stage is read back with an explicit schema, so Spark infers none, and
 the manifest's ``schema`` is the schema the stage returns.  A resume is
 trusted when ``_SUCCESS`` exists and the footer row sum equals the

@@ -23,7 +23,8 @@ shape the checkpointed layout only: neither store ever returns them.
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from webdedup import candidates as cand
@@ -58,6 +59,18 @@ def _column_identity(df: DataFrame, col) -> str:
         return df.select(col).columns[0]
     except AnalysisException as exc:
         raise ValueError(f"{col} does not resolve against {df.columns}") from exc
+
+
+def _skew_row(obs: Observation, skew: DataFrame) -> dict:
+    """A capped source's skew row: observed, or — when AQE pruned the
+    observed subtree and the Observation completed empty, which its row
+    conversion rejects with an AssertionError — aggregated."""
+    try:
+        return obs.get
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() != "java.lang.AssertionError":
+            raise
+        return skew.first().asDict()
 
 
 def run_dedup(
@@ -142,22 +155,27 @@ def run_dedup(
         )
 
         # -- 2. candidates (four sources, provenance-tagged) -----------------
-        skew_sources: list[DataFrame] = []
+        # each capped source's skew frame, with the Observation that receives
+        # the same row from the source's own bucket-sizing pass
+        skew_sources: list[tuple[Observation, DataFrame]] = []
 
         def build_candidates() -> DataFrame:
             # all sources in did space; urls rejoin ONCE after the union dedup
             # (two joins total, vs two per source — see candidates.rejoin_urls)
-            mh_pairs, mh_skew = cand.minhash_candidates(signatures, cfg)
-            sh_pairs, sh_skew = cand.simhash_candidates(signatures, cfg)
+            mh_obs, sh_obs, ss_obs, verify_obs = (Observation() for _ in range(4))
+            mh_pairs, mh_skew = cand.minhash_candidates(signatures, cfg, mh_obs)
+            sh_pairs, sh_skew = cand.simhash_candidates(signatures, cfg, sh_obs)
             ex_pairs = cand.exact_candidates(pages)
-            skew_sources[:] = [mh_skew, sh_skew]
+            skew_sources[:] = [(mh_obs, mh_skew), (sh_obs, sh_skew)]
             sources = [mh_pairs, sh_pairs, ex_pairs]
             if with_substring:
-                ss_pairs, ss_skew = sub.substring_candidates(pages, cfg, scope=keys)
-                verified, verify_skew = sub.verify_overlaps(
-                    ss_pairs, pages, cfg, scope=keys
+                ss_pairs, ss_skew = sub.substring_candidates(
+                    pages, cfg, scope=keys, observation=ss_obs
                 )
-                skew_sources.extend([ss_skew, verify_skew])
+                verified, verify_skew = sub.verify_overlaps(
+                    ss_pairs, pages, cfg, scope=keys, observation=verify_obs
+                )
+                skew_sources.extend([(ss_obs, ss_skew), (verify_obs, verify_skew)])
                 sources.append(
                     verified.select("did_a", "did_b").withColumn(
                         "method", F.lit("substring")
@@ -171,18 +189,12 @@ def run_dedup(
         def candidate_metrics(_observed: dict) -> dict:
             """Per-method dropped skew mass -> the stage manifest, so a run can
             audit what the bucket caps cost (north rule: capped mass is
-            reported, never silent).  Cost: the minhash/simhash skew aggregates
-            re-run their band/block explode + two-phase count from the
-            signatures snapshot (those key tables are deliberately NOT
-            persisted — pinning the job's dominant shuffle payload in RAM to
-            save one bounded metrics job is the wrong trade at scale); the
-            substring aggregates read their persisted key tables."""
-            if not skew_sources:
-                return {}
-            from functools import reduce
-
-            union = reduce(lambda a, b: a.unionByName(b), skew_sources)
-            return {"skew_drops": [r.asDict() for r in union.collect()]}
+            reported, never silent).  Each row was observed by the stage's
+            own work: the candidates write (minhash, simhash) or the
+            substring sources' eager checkpoints.  A source whose observed
+            subtree AQE pruned (its sibling side came up empty) has no row;
+            its skew frame computes the same row exactly, with a job."""
+            return {"skew_drops": [_skew_row(obs, skew) for obs, skew in skew_sources]}
 
         pairs = store.stage(
             "candidates",

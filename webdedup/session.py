@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import SparkSession
 
 # MEASURED ENVIRONMENT PATHOLOGY: huge-page faults on this VM run ~500x
@@ -153,26 +154,23 @@ def warm_python_workers(spark: SparkSession, cores: int | None = None) -> None:
     outside the timed region is standard bench practice and the workers are
     reused for the session's lifetime (spark.python.worker.reuse default).
     """
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     if cores is None:
         cores = spark.sparkContext.defaultParallelism
 
-    def _warm(x):
+    @F.pandas_udf(T.LongType())
+    def _warm(x: pd.Series) -> pd.Series:
         import webdedup.features  # noqa: F401
         import webdedup.signatures  # noqa: F401
         import webdedup.substring  # noqa: F401
 
         return x
 
-    assert pd is not None  # pandas needed worker-side; import checked here
-    _warm_udf = F.pandas_udf(_warm, T.LongType(), F.PandasUDFType.SCALAR)
-
     (
         spark.range(cores * 4, numPartitions=cores)
-        .select(_warm_udf(F.col("id")))
+        .select(_warm(F.col("id")))
         .write.format("noop")
         .mode("overwrite")
         .save()

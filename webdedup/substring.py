@@ -25,11 +25,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from webdedup.candidates import _pairs_from_keys, did
+from webdedup.candidates import _observe, _pairs_from_keys, did
 from webdedup.config import DedupConfig
 from webdedup.scope import Scope
 from webdedup.signatures import _mix64
@@ -122,15 +122,21 @@ def anchor_keys(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def substring_candidates(
-    pages: DataFrame, cfg: DedupConfig, *, scope: Scope
+    pages: DataFrame,
+    cfg: DedupConfig,
+    *,
+    scope: Scope,
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(pairs(did_a, did_b, method='substring'), skew_metrics): docs sharing
     a rare anchor, in the did space of every candidate source (urls come
-    back through candidates.rejoin_urls).  The anchor key tables are held
-    in ``scope``: close it once the pairs and skew metrics are
-    materialized."""
+    back through candidates.rejoin_urls).  The anchor key table and its
+    bucket-pruned copy are checkpointed into ``scope`` by this call, one
+    eager job each: close the scope once the pairs and skew metrics are
+    materialized.  ``observation`` receives the skew row from the pruning
+    pass (candidates._pairs_from_keys)."""
     # scope: the anchor scan is a pandas-UDF pass over the full corpus;
-    # without the persist it re-executes once per downstream consumer
+    # without the checkpoint it re-executes once per downstream consumer
     # (measured as the bulk of a 63s sf0.1 query).
     return _pairs_from_keys(
         anchor_keys(pages, cfg),
@@ -138,6 +144,7 @@ def substring_candidates(
         "substring",
         max_bucket=cfg.anchor_max_docs,
         scope=scope,
+        observation=observation,
     )
 
 
@@ -147,6 +154,7 @@ def verify_overlaps(
     cfg: DedupConfig,
     *,
     scope: Scope,
+    observation: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Keep pairs sharing at least one exact min_overlap_chars-char substring.
 
@@ -160,8 +168,10 @@ def verify_overlaps(
     Mixed-hotness caveat: a pair admitted via a rare anchor whose only
     >=min_overlap_chars shared span is hotter than verify_max_docs loses
     its certificate here; the dropped-bucket metrics are how a run audits
-    that exposure (see the candidates-stage manifest).  The sized gram
-    table is held in ``scope``: close it once the result is materialized.
+    that exposure (see the candidates-stage manifest).  This call fills
+    the sized gram table with one eager job and holds it in ``scope``:
+    close the scope once the result is materialized.  ``observation``
+    receives the skew row from that same job.
 
     Plan shape: the dense grams of candidate-pair MEMBER docs are exploded to
     (doc_id, gram) rows and self-joined within gram buckets, then the
@@ -179,8 +189,6 @@ def verify_overlaps(
     the anchor pass (anchor_max_docs < verify_max_docs).  Buckets of one doc
     produce no pairs and are dropped by the same gate for free.
     """
-    from pyspark import StorageLevel
-
     p = pairs.select("did_a", "did_b")
     members = (
         p.select(F.col("did_a").alias("m_did"))
@@ -197,16 +205,28 @@ def verify_overlaps(
         F.explode(udf(F.col("text"))).alias("gram"),
     )
     # bucket-size gate as a window count: one shuffle on gram (reused by the
-    # self-join below), no second aggregate-and-join pass over the UDF output
+    # self-join below), no second aggregate-and-join pass over the UDF output.
+    # Checkpointed, not persisted: the self-join's two sides and the skew
+    # frame read it, and AQE would submit one fill job per reader of an
+    # empty cache (see candidates._pairs_from_keys).
     w = Window.partitionBy("gram")
-    sized = scope.persist(
-        grams.withColumn("d", F.count(F.lit(1)).over(w)),
-        StorageLevel.MEMORY_AND_DISK,
+    d = F.col("d")
+    # observed metrics take no DISTINCT aggregate: a bucket of d > cap rows
+    # has d rows, so sum(1/d) over the over-cap rows counts its buckets
+    # (double error ~ rows * 1e-16, far inside the rounding)
+    over = F.when(d > cfg.verify_max_docs, d)
+    sized = scope.checkpoint(
+        _observe(grams.withColumn("d", F.count(F.lit(1)).over(w)), observation, [
+            F.lit("substring_verify").alias("method"),
+            F.round(F.coalesce(F.sum(1 / over), F.lit(0.0))).cast("long").alias(
+                "dropped_buckets"
+            ),
+            F.count(over).alias("dropped_rows"),
+            F.coalesce(F.max(over), F.lit(0)).alias("max_dropped_bucket"),
+        ])
     )
-    shared = sized.where(
-        (F.col("d") >= 2) & (F.col("d") <= cfg.verify_max_docs)
-    ).drop("d")
-    dropped = sized.where(F.col("d") > cfg.verify_max_docs)
+    shared = sized.where((d >= 2) & (d <= cfg.verify_max_docs)).drop("d")
+    dropped = sized.where(d > cfg.verify_max_docs)
     skew_metrics = dropped.agg(
         F.lit("substring_verify").alias("method"),
         F.coalesce(F.count_distinct("gram"), F.lit(0)).alias("dropped_buckets"),
